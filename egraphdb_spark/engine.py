@@ -22,6 +22,19 @@ A user of the reference interacts with HTTP routes (src/egraph_app.erl:
 State is three DataFrames (vertices / edges / indexes).  Mutation methods
 return a NEW Engine over the rewritten DataFrames (immutable-table
 semantics — on Delta/Iceberg these become MERGE/DELETE on one table).
+
+Each mutation commits its rewritten table as ONE materialised version:
+the new DataFrame goes through :func:`operators.checkpoint.cut_lineage`
+eagerly, so the write pays for its join/union once and every later read
+scans a leaf — as a read after a reference write hits the stored MySQL row.
+Without the cut every read would re-run the write, chained writes would
+nest the previous plan twice per upsert (2**k plan growth), and
+``F.current_timestamp()`` in an incoming batch would read a new
+``updated_at`` on every read.  ``reindex()`` commits its derived index
+table the same way.  By default the cut is ``localCheckpoint`` (executor
+block storage, no lineage fallback); a session with a checkpoint dir
+(``sparkContext.setCheckpointDir``) gets reliable ``checkpoint()``, so
+each committed version is persisted there.
 """
 
 from __future__ import annotations
@@ -31,8 +44,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.registry import EngineApi, FunctionRegistry
-from .ingest import build_indexes, delete_nodes, node_id, upsert_nodes
+from .ingest import build_indexes, delete_nodes, make_edges, node_id, upsert_nodes
 from .operators import scans, search as search_ops, traversal
+from .operators.checkpoint import cut_lineage
 from .plans.ir import validate
 
 
@@ -90,31 +104,36 @@ class Engine:
     # ------------------------------------------------------------- mutation
 
     def upsert_nodes(self, incoming: DataFrame) -> "Engine":
-        merged = upsert_nodes(self.vertices, incoming)
+        """Version-bumping upsert; commits one materialised vertices
+        version (indexes are re-derived lazily until ``reindex()``)."""
+        merged = upsert_nodes(self.vertices, incoming).transform(cut_lineage)
         return Engine(self.spark, merged, self.edges, None, self.registry)
 
     def delete_nodes(self, keys: list[str]) -> "Engine":
-        remaining = delete_nodes(self.vertices, keys)
+        """Anti-join delete; commits one materialised vertices version."""
+        remaining = delete_nodes(self.vertices, keys).transform(cut_lineage)
         return Engine(self.spark, remaining, self.edges, None, self.registry)
 
     def upsert_edges(self, links: DataFrame) -> "Engine":
-        from .ingest import make_edges
-
+        """Replace-or-insert per (src, dst); commits one materialised edges
+        version."""
         merged = (
             self.edges.join(
                 links.select(node_id("src_key").alias("src"), node_id("dst_key").alias("dst")),
                 ["src", "dst"],
                 "left_anti",
-            ).unionByName(make_edges(links))
+            )
+            .unionByName(make_edges(links))
+            .transform(cut_lineage)
         )
         return Engine(self.spark, self.vertices, merged, self.indexes, self.registry)
 
     def reindex(self) -> "Engine":
         """The whole background-reindexer machinery (2048 gen_servers,
-        egraph_reindexing_server.erl) as one idempotent derivation."""
-        return Engine(
-            self.spark, self.vertices, self.edges, build_indexes(self.vertices), self.registry
-        )
+        egraph_reindexing_server.erl) as one idempotent derivation,
+        committed as one materialised index version."""
+        indexes = build_indexes(self.vertices).transform(cut_lineage)
+        return Engine(self.spark, self.vertices, self.edges, indexes, self.registry)
 
     def reindex_status(self, n_shards: int = 2048) -> DataFrame:
         """Per-shard rebuild watermarks — the reference's reindex-status

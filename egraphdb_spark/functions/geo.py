@@ -26,16 +26,6 @@ def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Colum
     return F.lit(2.0 * SPHERE_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    """The same formula as ANSI SQL text (for DuckDB oracle parity)."""
-    return (
-        f"2.0 * {SPHERE_RADIUS_M} * asin(sqrt("
-        f"pow(sin(radians(({lat2}) - ({lat1})) / 2), 2) + "
-        f"cos(radians({lat1})) * cos(radians({lat2})) * "
-        f"pow(sin(radians(({lon2}) - ({lon1})) / 2), 2)))"
-    )
-
-
 def bbox_prefilter(
     lon: Column, lat: Column, center_lon: float, center_lat: float, dist_m: float
 ) -> Column:
@@ -62,10 +52,3 @@ def bbox_prefilter(
         return lat_ok
     return lat_ok & lon.between(center_lon - dlon, center_lon + dlon)
 
-
-def geo_point(lon: float, lat: float) -> Column:
-    """Literal GeoJSON Point struct."""
-    return F.struct(
-        F.lit("Point").alias("type"),
-        F.array(F.lit(float(lon)), F.lit(float(lat))).alias("coordinates"),
-    )

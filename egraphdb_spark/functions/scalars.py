@@ -44,10 +44,6 @@ def to_text(c):  # convert_to_binary
     return _c(c).cast("string")
 
 
-def to_boolean(c):
-    return _c(c).try_cast("boolean")
-
-
 # F2 — case helpers (util.erl:944-955)
 def lower_text(c):
     return F.lower(_c(c))
@@ -101,10 +97,6 @@ def from_epoch(c):
 # F7 — date arithmetic (util.erl:1172-1257)
 def minus_hours(c, n: int):
     return _c(c) - F.expr(f"INTERVAL {n} HOURS")
-
-
-def minus_minutes(c, n: int):
-    return _c(c) - F.expr(f"INTERVAL {n} MINUTES")
 
 
 def minus_months(c, n: int):

@@ -40,23 +40,6 @@ TABLES = (
 # job per table, which would otherwise be re-paid by every query call.
 _TABLE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
-# NO table is spread at load time.  Measured three ways this round
-# (interleaved same-session A/B, finally a 26-gate documents basket run
-# arm-alternating in one session: spread 63.8/64.4 s vs natural
-# 45.7/43.6 s): a blanket spread loses on net for EVERY table —
-# light column aggregates pay an exchange they don't need, and
-# high-cardinality aggregates (bigram tables, distinct lines, token
-# vocabularies, BPE pair counts) lose map-side partial-agg reduction on
-# pre-scattered input (up to P× more partial rows into their exchange).
-# The handful of consumers whose per-row compute is heavy AND whose
-# output aggregation is low-cardinality spread LOCALLY with
-# :func:`spread_low_parallelism` (poisson_bootstrap_ci,
-# bloom_prefilter_join, clean_dates_normalize, txt_repetition,
-# txt_lang_id, pipe_quality_ablation, dedup_fuzzy_pairs, txt_pii_scrub,
-# txt_readability, txt_winnow_fingerprints — each a measured win).
-_SPREAD_TABLES: frozenset[str] = frozenset()
-
-
 def spread_low_parallelism(df: DataFrame) -> DataFrame:
     """Repartition a low-parallelism scan up to the session's parallelism.
 
@@ -110,7 +93,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             # integer div, NOT /1000.0: epoch-nanos exceed double's 53-bit
             # mantissa, float division silently corrupts the microsecond
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return spread_low_parallelism(df) if t in _SPREAD_TABLES else df
+        # No table is spread at load time: a blanket spread measured a net
+        # loss (26-gate documents basket, 63.8 s vs 45.7 s natural); gates
+        # with heavy per-row work call spread_low_parallelism locally.
+        return df
 
     from concurrent.futures import ThreadPoolExecutor
 

@@ -59,20 +59,6 @@ def char_count(text: str | Column) -> Column:
     return F.length(c).cast("long")
 
 
-def stopword_ratio(text: str | Column, stopwords: tuple[str, ...] = QUALITY_STOPWORDS) -> Column:
-    """Fraction of tokens that are stopwords (0.0 for empty docs)."""
-    t = tokens(text)
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    hits = F.size(F.filter(t, lambda w: F.array_contains(sw, w)))
-    return (hits / F.greatest(F.size(t), F.lit(1))).cast("double")
-
-
-def mean_token_len(text: str | Column) -> Column:
-    t = tokens(text)
-    total = F.aggregate(t, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w))
-    return (total / F.greatest(F.size(t), F.lit(1))).cast("double")
-
-
 def quality_millionths(text: str | Column) -> Column:
     """Deterministic quality signal scaled to millionths, as exact BIGINT.
 

@@ -59,6 +59,37 @@ def _parse_dtype(dtype: str):
     return _parse_datatype_string(dtype)
 
 
+def _stage_events(sf_dir: str) -> str:
+    """Staging dir holding one link to ``sf_dir``'s events.parquet.
+
+    Keyed on the resolved data dir, so two data dirs that share a basename
+    never read each other's events; a link that dangles or points elsewhere
+    is re-pointed atomically.  The temporary link is a dot-file, which
+    Spark's file listing skips.
+    """
+    import hashlib
+    import os
+    import tempfile
+
+    src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
+    tag = hashlib.sha1(os.path.dirname(src).encode()).hexdigest()[:12]
+    name = os.path.basename(os.path.dirname(src))
+    stage = os.path.join(tempfile.gettempdir(), "egraphdb_stream_src", f"{name}-{tag}")
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, "events-000.parquet")
+    if os.path.islink(link) and os.readlink(link) == src:
+        return stage
+    tmp = os.path.join(stage, f".events-000.parquet.{os.getpid()}.tmp")
+    try:
+        os.symlink(src, tmp)
+    except OSError:
+        import shutil
+
+        shutil.copyfile(src, tmp)
+    os.replace(tmp, link)
+    return stage
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (stand-in for Kafka).
 
@@ -66,18 +97,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     single parquet file, so we expose it through a symlinked staging dir
     (exactly what a production file-drop ingestion directory looks like).
     """
-    import os
-
-    stage = f"/tmp/egraphdb_stream_src/{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(stage, exist_ok=True)
-    link = f"{stage}/events-000.parquet"
-    if not os.path.exists(link):
-        try:
-            os.symlink(f"{sf_dir}/events.parquet", link)
-        except OSError:
-            import shutil
-
-            shutil.copyfile(f"{sf_dir}/events.parquet", link)
+    stage = _stage_events(sf_dir)
     # Probe how THIS session surfaces the file's TIMESTAMP(NANOS) ts column
     # (schema-inference only — no data job) and mirror it in the stream
     # schema, so the reader works on any Spark version / conf combination.

@@ -2,10 +2,20 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from egraphdb_spark.engine import Engine
+from egraphdb_spark.ingest import (
+    build_indexes,
+    delete_edges,
+    delete_nodes,
+    make_edges,
+    make_vertices,
+    upsert_nodes,
+)
 from egraphdb_spark.plans.ir import QueryIRError, validate
 
 
@@ -81,6 +91,106 @@ def test_udf_api_surface(engine):
 def test_reindex_is_idempotent(engine):
     e2 = engine.reindex()
     assert e2.indexes.count() == engine.indexes.count()
+
+
+# ------------------------------------------------- committed table versions
+
+
+def _batch(spark, rows, updated_at=None):
+    """(key, details) pairs → a vertices batch indexed on c_mktsegment."""
+    raw = spark.createDataFrame(
+        [(k, d, [["c_mktsegment"]], [["c_mktsegment"]]) for k, d in rows],
+        "key string, details string, index_paths array<array<string>>, "
+        "lowercase_index_paths array<array<string>>",
+    )
+    return make_vertices(raw, kind=F.lit("customer"), updated_at=updated_at)
+
+
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_written_node_reads_one_updated_at(engine, spark):
+    # updated_at defaults to current_timestamp(): a committed write fixes it
+    e2 = engine.upsert_nodes(
+        _batch(spark, [("customer:7", '{"c_mktsegment": "RETAIL"}')])
+    ).reindex()
+    first = e2.get_detail("customer:7").head()["updated_at"]
+    time.sleep(0.5)
+    assert e2.get_detail("customer:7").head()["updated_at"] == first
+
+
+def test_chained_writes_keep_a_leaf_plan(engine, spark):
+    e, sizes = engine, []
+    for i in range(4):
+        batch = _batch(spark, [(f"customer:{i}", f'{{"c_mktsegment": "S{i}"}}')])
+        e = e.upsert_nodes(batch).reindex()
+        sizes.append((_plan_lines(e.vertices), _plan_lines(e.indexes)))
+    assert sizes == [sizes[0]] * 4
+    assert sizes[0][0] <= 2  # a scan of the committed version, nothing above it
+    assert e.get_detail("customer:3").head()["details"] == '{"c_mktsegment": "S3"}'
+
+
+def test_versions_follow_any_change_rule(engine, spark):
+    def write(e, details):
+        return e.upsert_nodes(_batch(spark, [("customer:v", details)])).reindex()
+
+    def version(e):
+        return e.get_detail("customer:v").head()["version"]
+
+    e0 = write(engine, '{"c_mktsegment": "A"}')
+    e1 = write(e0, '{"c_mktsegment": "B"}')
+    e2 = write(e1, '{"c_mktsegment": "C"}')
+    e3 = write(e2, '{"c_mktsegment": "C"}')  # identical payload: no bump
+    assert [version(e) for e in (e0, e1, e2, e3)] == [0, 1, 2, 2]
+
+
+def test_committed_writes_read_like_the_lazy_composition(engine, spark, graph):
+    ts = F.lit("2024-06-01 00:00:00").cast("timestamp")
+    batch = _batch(
+        spark,
+        [("customer:7", '{"c_mktsegment": "RETAIL"}'),
+         ("customer:new", '{"c_mktsegment": "RETAIL"}')],
+        updated_at=ts,
+    )
+    gone = ["customer:8", "region:0"]
+    links = spark.createDataFrame(
+        [("customer:new", "nation:3", "{}"), ("customer:7", "region:1", "{}")],
+        "src_key string, dst_key string, details string",
+    )
+    v1 = upsert_nodes(graph.vertices, batch)
+    v2 = delete_nodes(v1, gone)
+    edges3 = delete_edges(
+        graph.edges, [("customer:new", "nation:3"), ("customer:7", "region:1")]
+    )
+    lazy = [(v1, graph.edges), (v2, graph.edges), (v2, edges3.unionByName(make_edges(links)))]
+    committed = engine.upsert_nodes(batch)
+    steps = [committed]
+    steps.append(steps[-1].delete_nodes(gone))
+    steps.append(steps[-1].upsert_edges(links))
+    query = {
+        "type": "index",
+        "conditions": {"any": [{"key": "RETAIL", "key_type": "text",
+                                "index_name": "c_mktsegment"}]},
+        "selected_paths": {"seg": ["c_mktsegment"]},
+    }
+    for got, (v, e) in zip(steps, lazy):
+        want = Engine(spark, v, e, build_indexes(v))
+        for read in (
+            lambda x: x.search(query),
+            lambda x: x.get_detail("customer:7"),
+            lambda x: x.get_detail("customer:new"),
+            lambda x: x.get_detail("customer:8"),
+            lambda x: x.out_edges("customer:new"),
+            lambda x: x.out_edges("customer:7"),
+            lambda x: x.traverse("customer:7", maxdepth=1),
+        ):
+            assert _rows(read(got)) == _rows(read(want))
+    assert _rows(steps[0].search(query))  # the written nodes are searchable
 
 
 # ------------------------------------------------------------ IR validation

@@ -47,6 +47,39 @@ def test_stream_dedup_within_watermark(spark):
     assert got.count() == total  # duplicates dropped exactly
 
 
+def test_stream_stage_keyed_on_resolved_path(spark, tmp_path):
+    """Two data dirs with the same basename must each stream their own
+    events, and a stale staged link is re-pointed."""
+    import os
+
+    from egraphdb_spark.streaming.stream import EVENTS_SCHEMA, _stage_events
+
+    dirs = []
+    for side, ids in (("a", [1, 2, 3]), ("b", [10, 20])):
+        d = tmp_path / side / "sf_same"
+        spark.createDataFrame(
+            [(i, None, i, "view", 1.0, "{}") for i in ids], EVENTS_SCHEMA
+        ).coalesce(1).write.parquet(str(d / "_events"))
+        (part,) = [f for f in os.listdir(d / "_events") if f.endswith(".parquet")]
+        os.rename(d / "_events" / part, d / "events.parquet")
+        dirs.append((str(d), ids))
+    stages = {_stage_events(d) for d, _ in dirs}
+    assert len(stages) == 2
+    for n, (d, ids) in enumerate(dirs):
+        got = stream.run_to_memory(
+            stream.read_events_stream(spark, d).select("event_id"),
+            f"t_stream_stage_{n}", output_mode="append",
+        )
+        assert sorted(r["event_id"] for r in got.collect()) == ids
+    # a dangling link left in the stage is re-pointed at the data
+    stage = _stage_events(dirs[0][0])
+    link = os.path.join(stage, "events-000.parquet")
+    os.remove(link)
+    os.symlink(str(tmp_path / "gone" / "events.parquet"), link)
+    assert _stage_events(dirs[0][0]) == stage
+    assert os.path.samefile(link, os.path.join(dirs[0][0], "events.parquet"))
+
+
 def test_stream_upsert_into_vertices(spark, tmp_path):
     """SURVEY §7 phase-2 item 11: streaming upsert of events into vertices."""
     from egraphdb_spark.schema import VERTICES_SCHEMA

@@ -247,12 +247,10 @@ def test_bm25_posting_list_shuffle_and_broadcast_side_inputs(spark):
 
 
 def test_chunking_zero_shuffle(spark):
-    """Chunking is a pure per-row explode — no DATA-KEYED exchange
-    (no hash/range repartitioning); the only exchange allowed is the
-    keyless scan-spread round-robin (graph.spread_low_parallelism, r11),
-    which moves doc rows, never chunk rows."""
+    """Chunking is a pure per-row explode — no exchange at all (the gate
+    applies no scan spread)."""
     p = plan_of(q(spark, "pipe_chunking"))
-    assert "hashpartitioning" not in p and "rangepartitioning" not in p
+    assert "Exchange" not in p
     assert "Generate" in p  # the explode
 
 
@@ -321,11 +319,10 @@ def test_index_store_partition_pruning(spark, graph, tmp_path):
 
 def test_weighted_sample_is_pure_take_ordered(spark):
     # A-ES sampling must be TakeOrdered (k per partition → driver merge),
-    # never a global sort + limit; no data-keyed exchange (the keyless
-    # scan-spread round-robin over doc rows is allowed — r11)
+    # never a global sort + limit; no exchange at all (no scan spread)
     p = plan_of(q(spark, "sample_weighted"))
     assert "TakeOrderedAndProject" in p
-    assert "hashpartitioning" not in p and "rangepartitioning" not in p
+    assert "Exchange" not in p
 
 
 def test_wau_broadcast_semi_join_no_range_join(spark):
