@@ -19,6 +19,23 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter of
+    the host's physical memory, at most 48g.
+
+    In local mode the driver JVM is the whole engine.  A heap larger than
+    the host lets G1 keep growing and lets Spark's storage pool keep every
+    cached and locally-checkpointed block in memory, until the kernel's
+    OOM killer ends the JVM mid-run; with the heap inside the host, Spark
+    spills blocks to its local dirs and the GC reclaims dead ones instead.
+    """
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, phys_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "egraphdb-spark",
     master: str | None = None,
@@ -49,7 +66,7 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # The driver's events.parquet uses TIMESTAMP(NANOS), which Spark only

@@ -251,6 +251,21 @@ def test_session_cache_key_and_prune(spark):
     assert cache == {(key, "a"): 3}
 
 
+def test_default_driver_memory_fits_the_host():
+    """The default driver heap is a quarter of physical memory, capped at
+    48g: a heap above the host's RAM ends with the JVM OOM-killed."""
+    import os
+
+    from egraphdb_spark.session import default_driver_memory
+
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mem = default_driver_memory()
+    assert mem.endswith("m")
+    mb = int(mem[:-1])
+    assert mb == max(1024, min(48 * 1024, phys_mb // 4))
+    assert mb < phys_mb
+
+
 def test_reindex_status_watermarks(spark, graph):
     """reindex_status: shard totals reconcile with the base tables and the
     index join; reindex() leaves watermarks unchanged (idempotent)."""
