@@ -67,13 +67,12 @@ def spread_low_parallelism(df: DataFrame) -> DataFrame:
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    from .session import prune_dead_entries, session_cache_key
+    from .session import session_memo
 
-    app = session_cache_key(spark)
-    prune_dead_entries(_TABLE_CACHE, app)
-    cache_key = (app, sf_dir.rstrip("/"))
-    if cache_key in _TABLE_CACHE:
-        return _TABLE_CACHE[cache_key]
+    return session_memo(_TABLE_CACHE, spark, sf_dir, lambda: _read_tables(spark, sf_dir))
+
+
+def _read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # The driver (or any embedding application) supplies its own
     # SparkSession; events.parquet carries TIMESTAMP(NANOS) which vanilla
     # Spark rejects with PARQUET_TYPE_ILLEGAL. The conf is runtime-settable,
@@ -102,9 +101,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     with ThreadPoolExecutor(len(TABLES)) as ex:
         dfs = list(ex.map(_read, TABLES))
-    out = dict(zip(TABLES, dfs))
-    _TABLE_CACHE[cache_key] = out
-    return out
+    return dict(zip(TABLES, dfs))
 
 
 def _ts(pk_col: str):

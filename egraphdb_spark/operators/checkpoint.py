@@ -26,12 +26,18 @@ _PROFILE = bool(os.environ.get("SPARK_GRAFT_PROFILE_CUTS"))
 PROFILE_RECORDS: list[tuple[str, float]] = []
 
 
+# Frames a cut passes through on its way from the operator that asked for
+# it: this module, DataFrame.transform, and the shared superstep loops —
+# a record names the algorithm's line, not the loop primitive's.
+_PASS_THROUGH = ("checkpoint.py", "dataframe.py", "supersteps.py")
+
+
 def _caller() -> str:
     import traceback
 
     for frame in reversed(traceback.extract_stack(limit=8)[:-2]):
         fn = os.path.basename(frame.filename)
-        if fn not in ("checkpoint.py", "dataframe.py"):
+        if fn not in _PASS_THROUGH:
             return f"{fn}:{frame.lineno}"
     return "?"
 

@@ -12,6 +12,14 @@ joins + groupBy min, which Catalyst compiles to shuffle-efficient plans:
     map-side combined so the shuffle carries one label per (dst, partition))
   * iterate until fixpoint, localCheckpoint per round to cut lineage
 
+The loops shared by several operators — delta label propagation to a
+fixpoint (CC, SSSP, SCC coloring) and the level-synchronous frontier
+walk with a visited set (BFS levels, SCC's backward walk) — run on
+:mod:`.supersteps`, which alone decides when such a loop cuts lineage and
+how it tests for the end.  The fixed-round loops (PageRank, PPR, HITS,
+LPA, k-core, k-truss) are one step plus one cut each and stay inline, as
+do the MS-BFS level bodies of the centralities.
+
 Labels are *keys* (strings), not engine-specific hashes, so results are
 engine-portable (xxhash64 ids differ per seed across engines).
 """
@@ -21,6 +29,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .checkpoint import cut_lineage, cut_lineage_lazy
+from .supersteps import delta_fixpoint, frontier_walk
+
+
+def _symmetrize(e: DataFrame, a: str = "src_key", b: str = "dst_key") -> DataFrame:
+    """``e`` ∪ ``e`` reversed: the undirected closure of a two-column edge
+    frame ``(a, b)``, duplicates kept."""
+    return e.unionByName(e.select(F.col(b).alias(a), F.col(a).alias(b)))
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """Distinct ``key`` column of every src_key or dst_key of ``e``."""
+    return (
+        e.select(F.col("src_key").alias("key"))
+        .unionByName(e.select(F.col("dst_key").alias("key")))
+        .distinct()
+    )
 
 
 def connected_components(
@@ -28,61 +52,23 @@ def connected_components(
 ) -> DataFrame:
     """(key, component) — component = lexicographically-min key reachable.
 
-    Hash-min label propagation over (src_key, dst_key).  Converges in
-    O(diameter) rounds; each round is one join + one min-aggregate.  The
-    fixpoint check is a cheap count of label changes (AQE-coalesced).
+    Hash-min label propagation over (src_key, dst_key), run by
+    :func:`~.supersteps.delta_fixpoint`: only nodes whose label dropped
+    last round send.  Converges in O(diameter) rounds; each round is one
+    join + one min-aggregate.
     """
     e = edges.select("src_key", "dst_key")
     if undirected:
-        e = e.unionByName(
-            e.select(F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key"))
-        )
+        e = _symmetrize(e)
     e = e.distinct().transform(cut_lineage_lazy)
+    labels = _endpoints(e).select("key", F.col("key").alias("component"))
 
-    labels = (
-        e.select(F.col("src_key").alias("key"))
-        .unionByName(e.select(F.col("dst_key").alias("key")))
-        .distinct()
-        .select("key", F.col("key").alias("component"))
-    )
-    # DELTA propagation (the SSSP frontier trick for monotone min): only
-    # nodes whose label DROPPED last round send messages.  An unchanged
-    # node already delivered its label to every neighbor the round it
-    # last changed, and min is monotone, so dropping its re-sends leaves
-    # every per-round label — and the round the fixpoint fires —
-    # identical, while rounds 2+ join O(changed-adjacent edges) instead
-    # of O(|E|).
-    senders = labels
-    for _ in range(max_iter):
-        msgs = (
-            e.join(senders, e.src_key == senders.key)
-            .select(F.col("dst_key").alias("key"), F.col("component"))
+    def send(senders: DataFrame) -> DataFrame:
+        return e.join(senders, e.src_key == senders.key).select(
+            F.col("dst_key").alias("key"), "component"
         )
-        # one aggregate yields BOTH the new minimum and the previous
-        # value (old = min over rows tagged carried-forward — exactly
-        # one per key, since labels covers every key), so the fixpoint
-        # probe below is a cheap scan of the materialized frame instead
-        # of a second shuffle join per round (the SSSP merge trick).
-        merged = (
-            labels.withColumn("is_old", F.lit(1))
-            .unionByName(msgs.withColumn("is_old", F.lit(0)))
-            .groupBy("key")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("is_old") == 1, F.col("component"))).alias("old"),
-            )
-            .transform(cut_lineage)
-        )
-        changed = (
-            merged.where(F.col("component") != F.col("old")).limit(1).count()
-        )
-        senders = merged.where(F.col("component") != F.col("old")).select(
-            "key", "component"
-        )
-        labels = merged.select("key", "component")
-        if changed == 0:
-            break
-    return labels
+
+    return delta_fixpoint(labels, send, F.min, max_iter)[0]
 
 
 def shortest_paths_weighted(
@@ -97,7 +83,8 @@ def shortest_paths_weighted(
     IMPROVED last round emit messages this round — a vertex with an
     unchanged dist cannot produce a new relaxation, so relaxing its edges
     again is pure waste.  At 100× scale this is the difference between
-    O(frontier-adjacent edges) and O(|E|) work per round.  Each round:
+    O(frontier-adjacent edges) and O(|E|) work per round.  Each round
+    (:func:`~.supersteps.delta_fixpoint` with ``min``):
 
       messages = edges ⋈ broadcast(frontier) on src  (map-side, no e shuffle)
                  → groupBy(dst).min  (map-side combined pre-shuffle)
@@ -116,13 +103,14 @@ def shortest_paths_weighted(
         .select("src_key", "dst_key", "w")
         .transform(cut_lineage)  # scanned every round — materialize once
     )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(src_key, 0.0)], "key string, dist double")
-    frontier = dist
-    for _ in range(max_iter):
+    dist = edges.sparkSession.createDataFrame(
+        [(src_key, 0.0)], "key string, dist double"
+    )
+
+    def send(frontier: DataFrame) -> DataFrame:
         # pre-aggregate candidates per dst BEFORE the merge union: the
         # shuffle then carries one row per touched dst, not one per edge
-        relaxed = (
+        return (
             e.join(frontier.hint("broadcast"), e.src_key == frontier.key)
             .select(
                 F.col("dst_key").alias("key"),
@@ -131,26 +119,8 @@ def shortest_paths_weighted(
             .groupBy("key")
             .agg(F.min("dist").alias("dist"))
         )
-        # one groupBy produces BOTH the new minimum and the previous value
-        # (old = min over rows tagged as carried-forward), so the frontier
-        # below falls out of this materialized frame — no extra join.
-        merged = (
-            dist.withColumn("is_old", F.lit(1))
-            .unionByName(relaxed.withColumn("is_old", F.lit(0)))
-            .groupBy("key")
-            .agg(
-                F.min("dist").alias("dist"),
-                F.min(F.when(F.col("is_old") == 1, F.col("dist"))).alias("old"),
-            )
-            .transform(cut_lineage)
-        )
-        frontier = merged.where(
-            F.col("old").isNull() | (F.col("dist") < F.col("old"))
-        ).select("key", "dist")
-        dist = merged.select("key", "dist")
-        if frontier.limit(1).isEmpty():
-            break
-    return dist
+
+    return delta_fixpoint(dist, send, F.min, max_iter)[0]
 
 
 def _intdiv(a: "F.Column", d: "F.Column | int"):
@@ -185,12 +155,7 @@ def pagerank_scaled(
     # edges may be an expensive derivation (e.g. a JSON-predicate filter);
     # it is referenced twice per iteration plus nodes/deg — materialize once
     e = edges.select("src_key", "dst_key").transform(cut_lineage)
-    nodes = (
-        e.select(F.col("src_key").alias("key"))
-        .unionByName(e.select(F.col("dst_key").alias("key")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    nodes = _endpoints(e).transform(cut_lineage)
     n = nodes.count()
     # out-degree is static — fold it into the edge table ONCE instead of a
     # third join inside every iteration
@@ -226,25 +191,24 @@ def pagerank_scaled(
 
 def bfs_levels(edges: DataFrame, src_key: str, max_depth: int) -> DataFrame:
     """(key, level) — minimum hop count from src to every reachable node
-    within max_depth.  Level-synchronous BFS with a visited set; each level
-    is one broadcast join against the (small) frontier."""
-    spark = edges.sparkSession
-    start = spark.createDataFrame([(src_key, 0)], "key string, level int")
-    visited = start
-    frontier = start.select("key")
-    for level in range(1, max_depth + 1):
-        hop = (
+    within max_depth.  Level-synchronous BFS with a visited set
+    (:func:`~.supersteps.frontier_walk`); each level is one broadcast join
+    against the (small) frontier."""
+    start = edges.sparkSession.createDataFrame(
+        [(src_key, 0)], "key string, level int"
+    )
+
+    def expand(frontier: DataFrame, level: int) -> DataFrame:
+        return (
             edges.join(frontier.hint("broadcast"), edges.src_key == frontier.key)
             .select(F.col("dst_key").alias("key"))
             .distinct()
-            .join(visited.select("key"), "key", "left_anti")
             .select("key", F.lit(level).alias("level"))
-            .transform(cut_lineage)
         )
-        if hop.isEmpty():
-            break
-        visited = visited.unionByName(hop).transform(cut_lineage_lazy)
-        frontier = hop.select("key")
+
+    visited = start
+    for _, _, visited in frontier_walk(start, expand, max_depth):
+        pass
     return visited
 
 
@@ -267,18 +231,58 @@ def _seed_bits(seeds: DataFrame):
     return ranked, ranked.count()
 
 
-def _node_keymap(keymap: DataFrame) -> DataFrame:
-    """(nid, key) mapback table from a caller-supplied node-key frame.
+def _node_keymap(
+    keymap: DataFrame | None,
+    kedges: DataFrame | None = None,
+    symmetric: bool = False,
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """(nid, key) mapback table for operators that iterate on xxhash64 ids.
 
-    ``keymap`` carries one ``key`` row per node, UNIQUE by key (a
-    duplicate would duplicate output rows), covering at least every node
-    key the operator's output can contain — extra keys are harmless
-    because the final mapback is an inner join on the reached ids.  The
-    canonical caller argument is the engine's vertices table (key is its
-    primary key and every edge endpoint references it), which spares the
-    operator an edge-sized string distinct just to recover key strings.
+    A caller-supplied ``keymap`` carries one ``key`` row per node, UNIQUE
+    by key (a duplicate would duplicate output rows), covering at least
+    every node key the operator's output can contain — extra keys are
+    harmless because the final mapback is an inner join on the reached
+    ids.  The canonical caller argument is the engine's vertices table
+    (key is its primary key and every edge endpoint references it), which
+    spares the operator an edge-sized string distinct just to recover key
+    strings.
+
+    Without one, the map is the distinct endpoints of the key-edge frame
+    ``kedges`` (plus the ``key`` column of ``extra``, if given).  A
+    ``symmetric`` frame already lists every node on the src side — one
+    projection + node-sized distinct instead of a two-sided union.
     """
-    return keymap.select(F.xxhash64("key").alias("nid"), "key")
+    if keymap is not None:
+        return keymap.select(F.xxhash64("key").alias("nid"), "key")
+    keys = kedges.select(F.col("src_key").alias("key"))
+    if not symmetric:
+        keys = keys.unionByName(kedges.select(F.col("dst_key").alias("key")))
+    if extra is not None:
+        keys = keys.unionByName(extra.select("key"))
+    return keys.distinct().select(F.xxhash64("key").alias("nid"), "key")
+
+
+def _id_edges(
+    edges: DataFrame, symmetrize: bool, dedup: bool, keymap: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """Edge prep of the MS-BFS centralities: ``(e, keymap)`` with ``e`` the
+    (src, dst) xxhash64-id edge table, cut once, and the (nid, key)
+    mapback of :func:`_node_keymap`.
+
+    With ``symmetrize=True`` the caller passes the raw DIRECTED edge set
+    and the undirected closure is built here; ``dedup`` then runs on the
+    16 B id pairs, NOT the string pairs.
+    """
+    kedges = edges.select("src_key", "dst_key")
+    if symmetrize:
+        kedges = _symmetrize(kedges)
+    e = kedges.select(
+        F.xxhash64("src_key").alias("src"), F.xxhash64("dst_key").alias("dst")
+    )
+    if dedup:
+        e = e.distinct()
+    return e.transform(cut_lineage), _node_keymap(keymap, kedges, symmetrize)
 
 
 def harmonic_centrality(
@@ -324,28 +328,14 @@ def harmonic_centrality(
     # The BFS iterates on 8-byte xxhash64 node ids (the kcore/hits
     # discipline): level arithmetic never looks at the key, so message
     # rows carry 16 B of ids+bits instead of strings.  The id→key map
-    # joins back once, on the final node-sized aggregate.  With
-    # ``symmetrize=True`` the caller passes the raw DIRECTED edge set and
-    # the undirected closure is built here — union, then distinct on the
-    # 16 B id pairs, NOT on the string pairs.
-    eb = edges.select("src_key", "dst_key")
-    if symmetrize:
-        eb = eb.unionByName(
-            eb.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
-    e = eb.select(
-        F.xxhash64("src_key").alias("src"), F.xxhash64("dst_key").alias("dst")
-    )
+    # joins back once, on the final node-sized aggregate.
+    #
     # BFS min-level semantics are duplicate-immune (bit_or is idempotent),
-    # so the dedup exists only to shrink the per-round message joins.
-    # ``pre_deduped=True`` callers vouch the (symmetrized) union is
+    # so the dedup exists only to shrink the per-round message joins of a
+    # symmetrized union.  ``pre_deduped=True`` callers vouch the union is
     # duplicate-free and skip the edge-sized shuffle outright; the cut
     # then materializes a shuffle-free projection.
-    if symmetrize and not pre_deduped:
-        e = e.distinct()
-    e = e.transform(cut_lineage)
+    e, keymap = _id_edges(edges, symmetrize, symmetrize and not pre_deduped, keymap)
     ranked, n_seeds = _seed_bits(seeds)
     # per-level newly-reached frames: (key, ns = seeds first reaching the
     # node at this level, hm = ns * (10^6 div level)); level is a Python
@@ -391,21 +381,6 @@ def harmonic_centrality(
                     .alias("hm"),
                 )
             )
-    if keymap is not None:
-        keymap = _node_keymap(keymap)
-    else:
-        # symmetrized eb already lists every node on the src side — one
-        # projection + node-sized distinct instead of a two-sided union
-        keymap_src = (
-            eb.select(F.col("src_key").alias("k"))
-            if symmetrize
-            else eb.select(F.col("src_key").alias("k")).unionByName(
-                eb.select(F.col("dst_key").alias("k"))
-            )
-        )
-        keymap = keymap_src.distinct().select(
-            F.xxhash64("k").alias("nid"), F.col("k").alias("key")
-        )
     if not hops:
         reached = e.select(
             F.col("src").alias("key"),
@@ -554,11 +529,9 @@ def kcore_peel(
             )
             .distinct()
         )
-    und = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
+    und = _symmetrize(
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b")), "a", "b"
+    ).distinct()
     if checkpoint:
         und = und.transform(cut_lineage)
     e = und
@@ -608,13 +581,9 @@ def degree_stats(edges: DataFrame) -> DataFrame:
     # kcore/hits discipline) — both shuffles carry 16 B rows instead of
     # two key strings, and no mapback is needed (output is buckets only)
     ids = edges.select(
-        F.xxhash64("src_key").alias("src"), F.xxhash64("dst_key").alias("dst")
+        F.xxhash64("src_key").alias("a"), F.xxhash64("dst_key").alias("b")
     )
-    und = (
-        ids.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(ids.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
+    und = _symmetrize(ids, "a", "b").distinct()
     deg = und.groupBy("a").agg(F.count("*").alias("deg"))
     bucket = (F.length(F.expr("bin(deg)")) - 1).cast("long")
     return (
@@ -664,12 +633,7 @@ def label_propagation(
         id→key map joins back once on the final node-sized frame.
     """
     if undirected:
-        sym = edges.select("src_key", "dst_key")
-        sym = sym.unionByName(
-            sym.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
+        sym = _symmetrize(edges.select("src_key", "dst_key"))
         # distinct directed pairs in id space; the src KEY string rides
         # along as the round-1 label payload (functionally determined by
         # src, so whichever duplicate row survives carries the same value)
@@ -723,12 +687,7 @@ def label_propagation(
             "key", F.col("lbl").alias("community")
         )
     e = edges.select("src_key", "dst_key").distinct().transform(cut_lineage)
-    labels = (
-        e.select(F.col("src_key").alias("key"))
-        .union(e.select("dst_key"))
-        .distinct()
-        .select("key", F.col("key").alias("lbl"))
-    )
+    labels = _endpoints(e).select("key", F.col("key").alias("lbl"))
     for _ in range(rounds):
         msgs = e.join(
             labels.select(F.col("key").alias("src_key"), "lbl"), "src_key"
@@ -830,11 +789,7 @@ def neighbor_jaccard_pairs(
     """
     e = edges.select("src_key", "dst_key")
     if undirected:
-        e = e.unionByName(
-            e.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
+        e = _symmetrize(e)
     # adjacency as (node, neighbor), deduped; guard drops HUB NEIGHBORS
     adj = e.select(
         F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
@@ -909,11 +864,7 @@ def deterministic_walks(
         raise ValueError("steps must be >= 1")
     e = edges.select("src_key", "dst_key")
     if undirected:
-        e = e.unionByName(
-            e.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
+        e = _symmetrize(e)
     adj = e.select(
         F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
     ).distinct()
@@ -992,11 +943,7 @@ def adamic_adar_pairs(
     """
     e = edges.select("src_key", "dst_key")
     if undirected:
-        e = e.unionByName(
-            e.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
+        e = _symmetrize(e)
     adj = e.select(
         F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
     ).distinct()
@@ -1067,9 +1014,7 @@ def hits_scaled(edges: DataFrame, iters: int = 3, scale: int = 10**6) -> DataFra
         F.xxhash64("dst_key").alias("dst_key"),
     )
     nodes = (
-        ks.select(F.col("src_key").alias("key"))
-        .unionByName(ks.select(F.col("dst_key").alias("key")))
-        .distinct()
+        _endpoints(ks)
         .select(F.xxhash64("key").alias("nid"), "key")
         .transform(cut_lineage)
     )
@@ -1234,19 +1179,9 @@ def personalized_pagerank(
             .where(F.col("pr") > 0)
             .transform(cut_lineage)
         )
-    if keymap is not None:
-        # caller-supplied node-key frame (see _node_keymap) — must also
-        # cover the seed keys (a seed absent from the edges still
-        # carries restart mass)
-        km = _node_keymap(keymap).withColumnRenamed("key", "k")
-    else:
-        km = (
-            kedges.select(F.col("src_key").alias("k"))
-            .unionByName(kedges.select(F.col("dst_key").alias("k")))
-            .unionByName(kseeds.select(F.col("key").alias("k")))
-            .distinct()
-            .select(F.xxhash64("k").alias("nid"), F.col("k").alias("k"))
-        )
+    # a caller-supplied node-key frame must also cover the seed keys (a
+    # seed absent from the edges still carries restart mass)
+    km = _node_keymap(keymap, kedges, extra=kseeds).withColumnRenamed("key", "k")
     return pr.join(km, pr.key == km.nid).select(
         F.col("k").alias("key"), F.col("pr").alias("ppr")
     )
@@ -1288,9 +1223,10 @@ def strongly_connected_components(
     leftover path instead of fragmenting into wrong component ids.
 
     Scale: state is (key, label) rows; every step is the
-    aggregateMessages join+agg discipline with per-round
-    ``localCheckpoint`` (kcore/pagerank lineage rule).  Fixpoint checks
-    are limit(1) existence probes, not counts over the full frame.
+    aggregateMessages join+agg discipline.  The color fixpoint and the
+    backward walk run on :mod:`.supersteps` (``delta_fixpoint`` with
+    ``max``, ``frontier_walk``), which cut each round and probe it with a
+    limit(1) existence test, not a count over the full frame.
     """
     raw = edges.select("src_key", "dst_key")
     # The loops iterate on the CALLER'S keys, not xxhash64 ids — the
@@ -1304,12 +1240,7 @@ def strongly_connected_components(
     #
     # node set from the UNFILTERED edges: a node appearing only in a
     # self-loop is still a (singleton) SCC
-    nodes = (
-        raw.select(F.col("src_key").alias("key"))
-        .unionByName(raw.select(F.col("dst_key").alias("key")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    nodes = _endpoints(raw).transform(cut_lineage)
     e_all = (
         raw.where(F.col("src_key") != F.col("dst_key"))
         .distinct()
@@ -1339,86 +1270,52 @@ def strongly_connected_components(
                 )
                 .transform(cut_lineage)
             )
-        c = active.select("key", F.col("key").alias("color"))
-        # DELTA propagation (the SSSP frontier trick for monotone max):
-        # only nodes whose color ROSE last round send messages.  An
-        # unchanged node u already delivered its color to every
-        # out-neighbor the round it last changed, and max is monotone,
-        # so dropping its re-sends leaves every per-round color — and
-        # the round the probe fires — bit-identical, while rounds 2+
-        # join O(changed-adjacent edges) instead of O(|E|).
-        changed = c
-        stable = False
-        for _ in range(max_inner):
-            msgs = e.join(changed, e.src_key == changed.key).select(
+        # color fixpoint by delta propagation (supersteps.delta_fixpoint
+        # with max): only nodes whose color ROSE last round send
+        c, stable = delta_fixpoint(
+            active.select("key", F.col("key").alias("color")),
+            lambda changed: e.join(changed, e.src_key == changed.key).select(
                 F.col("dst_key").alias("key"), "color"
-            )
-            # the aggregate carries the previous color (max over rows
-            # tagged carried-forward — exactly one per key), so the
-            # stability probe is a cheap scan of the materialized frame
-            # instead of a second shuffle join per inner round (the
-            # SSSP merge trick).
-            nc = (
-                c.withColumn("is_old", F.lit(1))
-                .unionByName(msgs.withColumn("is_old", F.lit(0)))
-                .groupBy("key")
-                .agg(
-                    F.max("color").alias("color"),
-                    F.max(F.when(F.col("is_old") == 1, F.col("color"))).alias("old"),
-                )
-                .transform(cut_lineage)
-            )
-            stable = (
-                nc.where(F.col("color") != F.col("old")).limit(1).isEmpty()
-            )
-            changed = nc.where(F.col("color") != F.col("old")).select(
-                "key", "color"
-            )
-            c = nc.select("key", "color")
-            if stable:
-                break
+            ),
+            F.max,
+            max_inner,
+        )
         if not stable:
             # colors still changing ⇒ every active label is suspect;
             # settle nothing and fall through to the NULL leftover path
             break
-        reach = c.where(F.col("key") == F.col("color")).select(
+        roots = c.where(F.col("key") == F.col("color")).select(
             "key", F.col("color").alias("root")
         ).transform(cut_lineage)
-        frontier = reach
-        walk_done = False
-        for _ in range(max_inner):
-            # walk one step backward: u -> v with v settled-for-root and
+
+        def walk_back(frontier: DataFrame, _step: int) -> DataFrame:
+            # one step backward: u -> v with v settled-for-root and
             # c(u) = root  ⇒  u is in SCC(root).  Joining the FRONTIER
             # (last hop) instead of the whole growing reach set yields
             # the identical per-hop candidates — any u adjacent to an
             # older reach member was a candidate on the hop after that
-            # member joined, so it is already in reach and the anti-join
-            # removes it either way — while the edge join stays
+            # member joined, so it is already visited and the walk's
+            # anti-join removes it either way — while the edge join stays
             # O(frontier-adjacent edges) instead of O(reach-adjacent).
-            # The anti-join keys on the node alone: a node belongs to at
-            # most one color class, so (key, root) is determined by key.
-            cand = (
+            # Keying the walk on the node alone is exact: a node belongs
+            # to at most one color class, so (key, root) is determined by
+            # key.
+            return (
                 e.join(frontier, e.dst_key == frontier.key)
                 .select(F.col("src_key").alias("key"), "root")
                 .join(c, "key")
                 .where(F.col("color") == F.col("root"))
                 .select("key", "root")
                 .distinct()
-                .join(reach.select("key"), "key", "left_anti")
-                .transform(cut_lineage)
             )
-            if cand.limit(1).isEmpty():
-                walk_done = True
-                break
-            # plain union of the already-checkpointed hops (the
-            # harmonic-centrality visited-set discipline): re-cutting
-            # the growing union would re-materialize O(rounds²) rows
-            reach = reach.unionByName(cand)
-            frontier = cand
-        if not walk_done:
-            # incomplete SCC membership would make even the found
-            # members' min-key component id wrong — settle nothing
+
+        levels = list(frontier_walk(roots, walk_back, max_inner))
+        if len(levels) == max_inner:
+            # the walk never ran dry: incomplete SCC membership would
+            # make even the found members' min-key component id wrong —
+            # settle nothing
             break
+        reach = levels[-1][2] if levels else roots
         settled = (
             reach if settled is None else settled.unionByName(reach)
         )
@@ -1471,18 +1368,8 @@ def betweenness_k(
     # would multiply sigma and every backward contribution (unlike
     # harmonic/BFS, whose min-level semantics are duplicate-immune), so
     # the operator dedupes its input unless the caller vouches for
-    # distinctness (``pre_deduped=True``).  With ``symmetrize=True`` the
-    # caller passes the raw DIRECTED edge set and the undirected closure
-    # is built here; the dedup then runs on the 16 B id pairs, NOT the
-    # string pairs — the gates previously materialized a string-pair
-    # distinct of the largest table in the query just to re-hash it.
-    kedges = edges.select("src_key", "dst_key")
-    if symmetrize:
-        kedges = kedges.unionByName(
-            kedges.select(
-                F.col("dst_key").alias("src_key"), F.col("src_key").alias("dst_key")
-            )
-        )
+    # distinctness (``pre_deduped=True``).
+    #
     # Batched multi-source Brandes (MS-BFS batching, Then et al. VLDB'15,
     # applied to the landmark-Brandes passes): seeds run in batches of
     # ≤ 64; within a batch a node's per-seed state is ONE ROW — a 64-bit
@@ -1496,9 +1383,7 @@ def betweenness_k(
     # result is bit-identical.  The loops also stay on 8-byte xxhash64
     # node ids (the kcore/hits discipline) with one id→key mapback join
     # on the final aggregate.
-    e = kedges.select(
-        F.xxhash64("src_key").alias("src"), F.xxhash64("dst_key").alias("dst")
-    )
+    #
     # ``pre_deduped=True`` is the caller's proof obligation that the edge
     # set — INCLUDING the symmetrized union when ``symmetrize=True`` — is
     # duplicate-free (σ would double on a duplicate row).  The gates
@@ -1507,9 +1392,7 @@ def betweenness_k(
     # disjoint with no family's reverse being a family, so neither the
     # base set nor its reversal union can repeat a pair.  Skipping the
     # no-op distinct removes the largest prep shuffle in the query.
-    if not pre_deduped:
-        e = e.distinct()
-    e = e.transform(cut_lineage)
+    e, keymap = _id_edges(edges, symmetrize, not pre_deduped, keymap)
     ranked, n_seeds = _seed_bits(seeds)
     out = None
     for b in range(0, n_seeds, 64):
@@ -1651,21 +1534,6 @@ def betweenness_k(
             seeds.select(F.col("seed").alias("key"))
             .where(F.lit(False))
             .withColumn("bc_micro", F.lit(0).cast("long"))
-        )
-    if keymap is not None:
-        keymap = _node_keymap(keymap)
-    else:
-        # symmetrized kedges already lists every node on the src side —
-        # one projection + node-sized distinct instead of a two-sided union
-        keymap_src = (
-            kedges.select(F.col("src_key").alias("key"))
-            if symmetrize
-            else kedges.select(F.col("src_key").alias("key")).unionByName(
-                kedges.select(F.col("dst_key").alias("key"))
-            )
-        )
-        keymap = keymap_src.distinct().select(
-            F.xxhash64("key").alias("nid"), "key"
         )
     agg = out.groupBy("key").agg(F.sum("delta").cast("long").alias("bc_micro"))
     return (

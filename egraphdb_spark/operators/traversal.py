@@ -13,8 +13,10 @@ correct answer.  Spark-first we run a level-synchronous frontier expansion
 join per level instead of one RPC per vertex.
 
 Scale notes: each level is `frontier ⋈ edges` on src — with edges bucketed
-by src this is a co-located join; frontiers are localCheckpoint'ed to cut
-lineage growth across iterations (the classic iterative-algorithm pitfall).
+by src this is a co-located join.  The path search's level loop (visited
+set, per-level lineage cut, stop test) is :func:`.supersteps.frontier_walk`,
+which owns when the loop cuts and how it probes; :func:`k_hop` has no
+visited set by design and cuts its own hops.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..ingest import node_id
-from .checkpoint import cut_lineage, cut_lineage_lazy
+from .checkpoint import cut_lineage
+from .supersteps import frontier_walk
 
 
 def k_hop(edges: DataFrame, src_keys: list[str], depth: int) -> DataFrame:
@@ -63,50 +66,43 @@ def bfs_path(
     visited + parent walk :36-98).  The parent map stays distributed; only
     the final path walk collects, one tiny lookup per level.
     """
-    spark = edges.sparkSession
-    src_id_row = spark.createDataFrame([(src_key,)], "key string").select(
-        node_id("key").alias("id")
+    src = edges.sparkSession.createDataFrame([(src_key,)], "key string").select(
+        node_id("key").alias("id"), "key", F.lit(None).cast("string").alias("parent_key")
     )
 
-    frontier = src_id_row
-    visited = src_id_row
-    parent_levels: list[DataFrame] = []
-    found_level = None
-    for level in range(1, max_depth + 1):
-        expanded = (
+    def expand(frontier: DataFrame, _level: int) -> DataFrame:
+        # one parent per reached node: any frontier parent is on a
+        # shortest path
+        return (
             edges.join(frontier.hint("broadcast"), edges.src == frontier.id)
             .select(
                 F.col("dst").alias("id"),
                 F.col("dst_key").alias("key"),
-                F.col("src").alias("parent_id"),
                 F.col("src_key").alias("parent_key"),
             )
-        )
-        fresh = (
-            expanded.join(visited, on="id", how="left_anti")
             .dropDuplicates(["id"])
-            .transform(cut_lineage)
         )
-        # one action per level: frontier size + did-we-reach-dst together
-        stats = fresh.agg(
+
+    def stats(fresh: DataFrame):
+        # the level's one action: frontier size + did-we-reach-dst together
+        row = fresh.agg(
             F.count("*").alias("n"),
             F.max(F.when(F.col("key") == dst_key, 1).otherwise(0)).alias("hit"),
         ).head()
-        if stats["n"] == 0:
-            return None
+        return row if row["n"] else None
+
+    parent_levels: list[DataFrame] = []
+    for fresh, row, _ in frontier_walk(src, expand, max_depth, key="id", probe=stats):
         parent_levels.append(fresh)
-        if stats["hit"] == 1:
-            found_level = level
+        if row["hit"] == 1:
             break
-        visited = visited.unionByName(fresh.select("id")).transform(cut_lineage_lazy)
-        frontier = fresh.select("id")
-    if found_level is None:
+    else:
         return None
 
     # Walk parents back from dst — one single-row collect per level.
     path = [dst_key]
     want_key = dst_key
-    for lvl in range(found_level - 1, -1, -1):
+    for lvl in range(len(parent_levels) - 1, -1, -1):
         row = (
             parent_levels[lvl]
             .where(F.col("key") == want_key)

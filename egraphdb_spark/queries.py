@@ -28,29 +28,28 @@ _FIXTURES: dict[tuple[str, str], GraphFixture] = {}
 
 
 def fixture(spark: SparkSession, sf_dir: str) -> GraphFixture:
-    from .session import prune_dead_entries, session_cache_key
+    from .session import session_memo
 
-    app = session_cache_key(spark)
-    prune_dead_entries(_FIXTURES, app)
-    key = (app, sf_dir.rstrip("/"))
-    if key not in _FIXTURES:
-        g = GraphFixture(spark, sf_dir)
-        # Repartition the derived tables to the session's parallelism
-        # before caching (guide §2.5): the raw builds inherit partition
-        # counts from file splits / AQE-coalesced join outputs — sized for
-        # I/O, not for the CPU-heavy consumers (every graph gate starts by
-        # JSON-parsing the full cached edge table; every search gate scans
-        # the cached index).  One exchange each at fixture-build time buys
-        # every downstream scan full-width map stages.  At 100 TB these
-        # derived tables are written bucketed (see build_vertices /
-        # build_indexes docstrings); the session cache mirrors that layout
-        # decision at the session's own width.
-        par = spark.sparkContext.defaultParallelism
-        g.vertices = g.vertices.repartition(par).cache()
-        g.edges = g.edges.repartition(par).cache()
-        g.indexes = g.indexes.repartition(par).cache()
-        _FIXTURES[key] = g
-    return _FIXTURES[key]
+    return session_memo(_FIXTURES, spark, sf_dir, lambda: _build_fixture(spark, sf_dir))
+
+
+def _build_fixture(spark: SparkSession, sf_dir: str) -> GraphFixture:
+    g = GraphFixture(spark, sf_dir)
+    # Repartition the derived tables to the session's parallelism
+    # before caching (guide §2.5): the raw builds inherit partition
+    # counts from file splits / AQE-coalesced join outputs — sized for
+    # I/O, not for the CPU-heavy consumers (every graph gate starts by
+    # JSON-parsing the full cached edge table; every search gate scans
+    # the cached index).  One exchange each at fixture-build time buys
+    # every downstream scan full-width map stages.  At 100 TB these
+    # derived tables are written bucketed (see build_vertices /
+    # build_indexes docstrings); the session cache mirrors that layout
+    # decision at the session's own width.
+    par = spark.sparkContext.defaultParallelism
+    g.vertices = g.vertices.repartition(par).cache()
+    g.edges = g.edges.repartition(par).cache()
+    g.indexes = g.indexes.repartition(par).cache()
+    return g
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

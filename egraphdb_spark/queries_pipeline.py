@@ -34,12 +34,11 @@ def _t(spark, sf_dir: str, name: str):
     return load_tables(spark, sf_dir)[name]
 
 
-# Materialized shingle table, memoized per (session, sf_dir) — the dedup
-# family's shared derived input (see dedup.shingle_table).  Cached like the
-# fixture's vertices/edges/indexes: the corpus-scan + explode + md5 cost is
-# paid once, not once per signature family.  Keyed on applicationId (not
-# id(spark): addresses get reused after GC) and pruned of dead-session
-# entries so executor memory is not pinned for the process lifetime.
+# Materialized shingle table, memoized per (session, sf_dir) by
+# session.session_memo — the dedup family's shared derived input (see
+# dedup.shingle_table).  Cached like the fixture's vertices/edges/indexes:
+# the corpus-scan + explode + md5 cost is paid once, not once per
+# signature family.
 _DOC_SHINGLES: dict[tuple[str, str], object] = {}
 
 
@@ -55,30 +54,28 @@ def _docs_spread(spark, sf_dir: str):
     return spread_low_parallelism(_t(spark, sf_dir, "documents"))
 
 def doc_shingles(spark, sf_dir: str):
-    from .session import prune_dead_entries, session_cache_key
+    from .session import session_memo
 
-    app = session_cache_key(spark)
-    prune_dead_entries(_DOC_SHINGLES, app)
-    key = (app, sf_dir.rstrip("/"))
-    if key not in _DOC_SHINGLES:
-        # The shingle cache keeps the documents scan's NATURAL partitioning
-        # (file splits), deliberately bypassing load_tables' documents
-        # spread.  Measured (r11, gate-level A/B swapping the cache in one
-        # session): natural layout beat both a 32-wide round-robin cache
-        # and id-/h-hash-partitioned caches on every shingle consumer
-        # (dedup_lsh_recall 3.9 vs 6.6-10.9 s, dedup_source_overlap 1.7 vs
-        # 2.7-3.8 s, dedup_hamming64_pairs ~3.0-3.7 both) — the family's
-        # heavy keys (shingle/h/band) are high-cardinality, and
-        # pre-scattering the cache multiplies every map-side partial
-        # aggregate by the partition count, which costs more than the map
-        # width buys.  At 100 TB the scan has thousands of splits and this
-        # is simply the bucketed-derived-table layout the shingle_table
-        # docstring already prescribes.
-        docs = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-        _DOC_SHINGLES[key] = dedup.shingle_table(
-            docs, "doc_id", "text"
-        ).cache()
-    return _DOC_SHINGLES[key]
+    # The shingle cache keeps the documents scan's NATURAL partitioning
+    # (file splits).  Measured (r11, gate-level A/B swapping the cache in
+    # one session): natural layout beat both a 32-wide round-robin cache
+    # and id-/h-hash-partitioned caches on every shingle consumer
+    # (dedup_lsh_recall 3.9 vs 6.6-10.9 s, dedup_source_overlap 1.7 vs
+    # 2.7-3.8 s, dedup_hamming64_pairs ~3.0-3.7 both) — the family's
+    # heavy keys (shingle/h/band) are high-cardinality, and
+    # pre-scattering the cache multiplies every map-side partial
+    # aggregate by the partition count, which costs more than the map
+    # width buys.  At 100 TB the scan has thousands of splits and this is
+    # simply the bucketed-derived-table layout the shingle_table
+    # docstring already prescribes.
+    return session_memo(
+        _DOC_SHINGLES,
+        spark,
+        sf_dir,
+        lambda: dedup.shingle_table(
+            _t(spark, sf_dir, "documents"), "doc_id", "text"
+        ).cache(),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -13,8 +13,11 @@ At 100 TB the knobs that matter are set per-job by the cluster manager
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -101,3 +104,22 @@ def prune_dead_entries(cache: dict, live_key: str) -> None:
     """
     for k in [k for k in cache if k[0] != live_key]:
         del cache[k]
+
+
+def session_memo(
+    cache: dict, spark: SparkSession, sf_dir: str, build: Callable[[], T]
+) -> T:
+    """``build()`` memoized in ``cache`` per (live session, ``sf_dir``).
+
+    The one memo for per-session derived state (table reads, the graph
+    fixture, the shingle table): entries key on ``(session_cache_key,
+    sf_dir without a trailing slash)``, and entries of stopped sessions
+    are pruned on every call, so a dead session's cached plans are not
+    pinned for the process lifetime.
+    """
+    app = session_cache_key(spark)
+    prune_dead_entries(cache, app)
+    key = (app, sf_dir.rstrip("/"))
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]

@@ -251,6 +251,25 @@ def test_session_cache_key_and_prune(spark):
     assert cache == {(key, "a"): 3}
 
 
+def test_session_memo_builds_once_per_session_and_dir(spark):
+    """session_memo: one build per (live session, sf_dir without trailing
+    slash); entries of dead sessions are dropped on the next call."""
+    from egraphdb_spark.session import session_cache_key, session_memo
+
+    key = session_cache_key(spark)
+    cache = {("app-old", "/d"): "stale"}
+    builds = []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert session_memo(cache, spark, "/d/", build) == 1
+    assert session_memo(cache, spark, "/d", build) == 1
+    assert session_memo(cache, spark, "/e", build) == 2
+    assert cache == {(key, "/d"): 1, (key, "/e"): 2}
+
+
 def test_default_driver_memory_fits_the_host():
     """The default driver heap is a quarter of physical memory, capped at
     48g: a heap above the host's RAM ends with the JVM OOM-killed."""

@@ -30,6 +30,21 @@ def test_cc_long_chain_delta_rounds(spark):
     assert got == {f"n{i:02d}": "n00" for i in range(12)}
 
 
+def test_cut_profile_names_the_algorithm_not_the_superstep_loop(spark, monkeypatch):
+    """Every profiled cut of a loop run by operators.supersteps is
+    attributed to the algorithm's own line (what tools/profile_query.py
+    prints as "cut … where"), not to the shared loop primitive."""
+    from egraphdb_spark.operators import checkpoint
+
+    records: list = []
+    monkeypatch.setattr(checkpoint, "_PROFILE", True)
+    monkeypatch.setattr(checkpoint, "PROFILE_RECORDS", records)
+    e = _edges(spark, [("a", "b"), ("b", "c"), ("x", "y")])
+    connected_components(e).collect()
+    assert records
+    assert all(where.startswith("graph_algos.py:") for where, _ in records), records
+
+
 def test_cc_directed_chain_undirected_semantics(spark):
     # undirected=True joins a long chain into one component even though
     # edges all point one way

@@ -224,6 +224,47 @@ def test_bfs_levels_match_reference(spark):
         assert got == bfs_ref(pairs, src, 4), name
 
 
+def test_bfs_path_is_a_shortest_path_or_none(spark):
+    """traversal.bfs_path on every hostile graph: a valid edge path whose
+    hop count is the BFS distance, or None when dst is out of reach
+    within max_depth.  Queries start from the first key, the last key and
+    a self-loop node where the graph has one; chain_cycle adds an
+    unreachable pair (from the self-loop-only node) and a pair one hop
+    beyond max_depth."""
+    from egraphdb_spark.ingest import node_id
+    from egraphdb_spark.operators.traversal import bfs_path
+
+    max_depth = 4
+    outcomes = set()
+    for name, pairs in GRAPHS.items():
+        # bfs_path joins on node_id(key), not on _edges' dense ids
+        e = spark.createDataFrame(pairs, "src_key string, dst_key string").select(
+            "src_key", "dst_key",
+            node_id("src_key").alias("src"), node_id("dst_key").alias("dst"),
+        )
+        keys = sorted({k for p in pairs for k in p})
+        queries = [(keys[0], keys[-1]), (keys[-1], keys[0])]
+        for loop in sorted({s for s, d in pairs if s == d})[:1]:
+            queries += [(loop, keys[0]), (loop, keys[len(keys) // 2])]
+        if name == "chain_cycle":
+            queries += [("iso", "c0"), ("c0", "c5"), ("c0", "c4")]
+        edge_set = set(pairs)
+        for src, dst in queries:
+            if src == dst:
+                continue
+            got = bfs_path(e, src, dst, max_depth=max_depth)
+            want = bfs_ref(pairs, src, max_depth).get(dst)
+            if want is None:
+                assert got is None, (name, src, dst, got)
+            else:
+                assert got is not None, (name, src, dst)
+                assert got[0] == src and got[-1] == dst, (name, got)
+                assert len(got) - 1 == want, (name, src, dst, got, want)
+                assert all(hop in edge_set for hop in zip(got, got[1:])), (name, got)
+            outcomes.add(want is None)
+    assert outcomes == {True, False}
+
+
 def test_triangle_census_matches_reference_both_orientations(spark):
     for name, pairs in GRAPHS.items():
         want = tri_ref(pairs)

@@ -199,6 +199,41 @@ def test_contamination_no_driver_jobs_during_construction(spark):
     assert "Join" in plan_of(df)
 
 
+# Spark jobs per run of the superstep-loop graph gates at SF_SMOKE, as
+# measured before their loops moved to operators.supersteps (the same at
+# SPARK_GRAFT_CPUS 2 and 4).  Each cut and each probe is a job, so these
+# pin the per-superstep job cost of the shared loops.
+_GRAPH_GATE_JOBS = {
+    "graph_scc": 74,
+    "graph_cc": 19,
+    "graph_sssp_weighted": 22,
+    "graph_bfs_levels": 19,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GRAPH_GATE_JOBS))
+def test_superstep_gates_launch_no_more_jobs(spark, name):
+    """Job count of a graph gate's full run, read from the status tracker
+    under its own job group.  The first run warms the memoized fixture;
+    the count is the smaller of two more runs, because AQE may launch a
+    stage job before a sibling stage turns out empty, which adds a job
+    now and then but never removes one."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(run: int) -> int:
+        group = f"superstep-jobs-{name}-{run}"
+        sc.setJobGroup(group, group)
+        try:
+            q(spark, name).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    jobs(0)
+    assert min(jobs(1), jobs(2)) <= _GRAPH_GATE_JOBS[name]
+
+
 def test_q6_pure_scan_pushdown(spark):
     """Q6 is the pushdown-evidence query: no join anywhere, and the whole
     shipdate/discount/quantity predicate reaches the parquet reader."""

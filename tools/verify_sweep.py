@@ -2,8 +2,9 @@
 """Local mimic of the driver's correctness sweep.
 
 Fresh process, VANILLA SparkSession (no engine confs — exactly what the
-driver supplies), every registry gate run against its DuckDB oracle at
-sf0.01 (the driver's oracle scale).  Usage:
+driver supplies; the driver heap is ``SPARK_GRAFT_DRIVER_MEM`` or
+``session.default_driver_memory()``), every registry gate run against its
+DuckDB oracle at sf0.01 (the driver's oracle scale).  Usage:
 
     python tools/verify_sweep.py [sf_dir] [name_substring ...]
 
@@ -29,11 +30,18 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from egraphdb_spark.session import default_driver_memory
+
+    # the heap is the only engine-side value: a fixed one above the host's
+    # RAM gets the JVM OOM-killed part way through the sweep
     spark = (
         SparkSession.builder.master("local[32]")
         .appName("verify-sweep")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .getOrCreate()
     )
 
