@@ -5,8 +5,9 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Implementations live in egraphdb_spark/queries.py (one entry per
-operator from SURVEY.md §2 plus the Spark-native extensions).
+Implementations live in egraphdb_spark/gates/, one module per gate
+family (one entry per operator from SURVEY.md §2 plus the Spark-native
+extensions), joined into one registry by egraphdb_spark/queries.py.
 """
 
 from __future__ import annotations

@@ -300,7 +300,7 @@ def main() -> None:
     # shuffle tail).  The shingle table is the dedup family's shared derived
     # input (dedup.shingle_table) — materialized here with the other derived
     # tables so its one-time cost is attributed to ingest, transparently.
-    from egraphdb_spark.queries_pipeline import doc_shingles
+    from egraphdb_spark.graph import doc_shingles
 
     from concurrent.futures import ThreadPoolExecutor
 

@@ -12,6 +12,8 @@ Layout:
   sources/      — sinks (json/csv/parquet) and ingest readers
   streaming/    — Structured Streaming operators over the events table
   plans/        — query-IR (JSON) → DataFrame compiler
+  gates/        — the gates, one module per family; queries.py joins their
+                  GATES dicts into the driver-facing REGISTRY
 """
 
 __version__ = "0.1.0"

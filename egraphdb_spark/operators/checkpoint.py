@@ -30,15 +30,17 @@ PROFILE_RECORDS: list[tuple[str, float]] = []
 # it: this module, DataFrame.transform, and the shared superstep loops —
 # a record names the algorithm's line, not the loop primitive's.
 _PASS_THROUGH = ("checkpoint.py", "dataframe.py", "supersteps.py")
+# Records name files relative to the package, so gates/graph.py and
+# graph.py (or gates/text.py and operators/text.py) stay apart.
+_PACKAGE_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _caller() -> str:
     import traceback
 
     for frame in reversed(traceback.extract_stack(limit=8)[:-2]):
-        fn = os.path.basename(frame.filename)
-        if fn not in _PASS_THROUGH:
-            return f"{fn}:{frame.lineno}"
+        if os.path.basename(frame.filename) not in _PASS_THROUGH:
+            return f"{os.path.relpath(frame.filename, _PACKAGE_DIR)}:{frame.lineno}"
     return "?"
 
 

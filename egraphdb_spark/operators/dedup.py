@@ -126,7 +126,7 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     by shingle), exactly like the typed index table: the normalize + explode
     + md5 scan is the dominant dedup cost and every signature family reads
     the same rows, so deriving it per-query would re-pay the corpus scan
-    3×.  Callers memoize/cache it (see queries_pipeline._doc_shingles).
+    3×.  Callers memoize/cache it (see graph.doc_shingles).
     """
     ex = with_shingles(df.select(F.col(id_col).alias("id"), text_col), text_col)
     return ex.select("id", "shingle", shingle_hash32("shingle").alias("h"))
@@ -1532,7 +1532,7 @@ def contamination_spans(
     that also occurs ANYWHERE in the benchmark/eval table, merge marked
     positions into maximal spans, and report per-document contaminated
     coverage.  The span-granular sibling of doc-level
-    :func:`~.queries_pipeline` contamination (which flags whole docs on
+    gates/dedup.py contamination (which flags whole docs on
     any shared shingle): this one measures HOW MUCH of each document is
     benchmark text, which is what the removal decision actually needs.
 

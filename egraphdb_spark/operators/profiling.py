@@ -652,7 +652,7 @@ def psi_drift(ref: DataFrame, cur: DataFrame, bucket: Column | str) -> DataFrame
     # is < 2^53 so it is exact in double, and double(a)*double(b) is the
     # same single rounding of the exact product that cast(a*b as double)
     # would be — identical bits, no overflow.  Oracle mirrors this
-    # (queries_pipeline.py O_PROFILE_DRIFT_PSI).
+    # (gates/sketch_sample.py O_PROFILE_DRIFT_PSI).
     contrib = F.expr(
         "cast(floor(("
         "  (cast(n_cur + 1 as double) / cast(tcur + nb as double)"

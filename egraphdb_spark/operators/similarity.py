@@ -55,7 +55,7 @@ def cosine(a: Column, b: Column) -> Column:
     NaN in DuckDB, which DuckDB sorts ABOVE every real similarity; 0.0 is
     deterministic, identical on both engines, and ranks zero vectors last
     / below any positive threshold.  The SQL oracles carry the identical
-    CASE guard (queries_pipeline._cos_sql).
+    CASE guard (gates/similarity.py _cos_sql).
     """
     return _cos_pre(a, b, _norm(a), _norm(b))
 

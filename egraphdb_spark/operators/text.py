@@ -12,7 +12,7 @@ embarrassingly: one narrow projection over the documents table, no shuffle,
 predicate/column pruning reach the parquet scan untouched.
 
 Determinism contract: each formula is reproducible in ANSI SQL (the DuckDB
-oracles in queries_pipeline.py re-derive the same values bit-for-bit).
+oracles in gates/text.py re-derive the same values bit-for-bit).
 """
 
 from __future__ import annotations

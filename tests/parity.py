@@ -122,15 +122,3 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> list[str]:
                     f"col {c}: {bad} mismatches, first at row {i}: {av[i]!r} vs {bv[i]!r}"
                 )
     return problems
-
-
-def check_query(spark, name: str, sf_dir: str) -> list[str]:
-    from egraphdb_spark.queries import REGISTRY
-
-    fn, sql = REGISTRY[name]
-    sdf = fn(spark, sf_dir)
-    spark_pdf = sdf.toPandas()
-    if sql is None:
-        return [] if len(spark_pdf) >= 0 else ["unreachable"]
-    oracle_pdf = run_oracle(sql, sf_dir)
-    return compare(spark_pdf, oracle_pdf)

@@ -372,7 +372,7 @@ def test_rfm_segments_cover_all_users_and_score_range(spark):
 
 
 def test_skew_kurtosis_known_shapes(spark):
-    from egraphdb_spark.queries_ext import q_agg_skew_kurtosis  # noqa: F401
+    from egraphdb_spark.gates.relational import q_agg_skew_kurtosis  # noqa: F401
     from pyspark.sql import functions as FF
 
     # symmetric uniform -> skew ~ 0, kurtosis ~ -1.2; constant -> NULLs

@@ -120,6 +120,35 @@ FUZZ_GATES = [
     # extra coverage (the trainer alone is property-tested against a
     # pure-Python reference in test_tokenizer.py).
     "txt_bpe_vocab_tokens",
+    "txt_gopher_quality",
+    "clean_url_canon",
+    "privacy_dp_mean",
+    "profile_drift_ks",
+    "privacy_dp_counts",
+    "sketch_ams_f2",
+    "txt_winnow_fingerprints",
+    "txt_kneser_ney",
+    "sketch_moments_chebyshev",
+    "rag_ndcg",
+    "sample_pps_systematic",
+    "profile_gini",
+    "txt_zipf_fit",
+    "txt_gopher_lines",
+    "dedup_winnow_pairs",
+    "clean_html_strip",
+    "privacy_dp_topk",
+    "txt_heaps_fit",
+    # rag_fusion_weighted and rag_feature_rerank read the fixed symlinked
+    # embeddings: their hostile surface is the BM25-over-hostile-docs half;
+    # mm_phash_pairs folds payload bytes = utf-8 of the hostile text
+    "dedup_hamming64_pairs",
+    "txt_dup_structure",
+    "rag_fusion_weighted",
+    "dedup_span_coverage",
+    "mm_phash_pairs",
+    "rag_feature_rerank",
+    "pipe_despan_rewrite",
+    "dedup_contam_spans",
 ]
 
 _LANGS = ["en", "de", "fr", "zh", "es"]
@@ -152,79 +181,15 @@ def _write_corpus(spark, texts: list[str]) -> str:
     return d
 
 
-# round-7 staged gates that read only the documents table fuzz here too,
-# pre-merge (graph_ktruss reads the TPC-H tables and is out of scope)
-STAGED_FUZZ_GATES = [
-    "txt_gopher_quality",
-    "clean_url_canon",
-    "privacy_dp_mean",
-    "profile_drift_ks",
-    "privacy_dp_counts",
-    "sketch_ams_f2",
-]
-
-# round-8 gates that read only the documents table (queries_r8.py);
-# clean_dates_normalize reads events and fuzzes in the events battery
-# round-9 staged gates (STAGED_R9_REGISTRY, pre-merge): documents-shaped
-# (rag_fusion_weighted's embeddings side is the fixed symlinked table —
-# its hostile surface is the BM25-over-hostile-docs half)
-STAGED_R9_FUZZ_GATES = [
-    "dedup_hamming64_pairs",
-    "txt_dup_structure",
-    "rag_fusion_weighted",
-]
-
-# round-10 staged gates (STAGED_R10_REGISTRY, pre-merge): documents-shaped
-# (mm_phash_pairs folds payload bytes = utf-8 of the hostile text;
-# rag_feature_rerank mirrors rag_fusion_weighted's hostile surface;
-# sketch_sampled_quantiles reads events and fuzzes in the events battery)
-STAGED_R10_FUZZ_GATES = [
-    "dedup_span_coverage",
-    "mm_phash_pairs",
-    "rag_feature_rerank",
-    "pipe_despan_rewrite",
-    "dedup_contam_spans",
-]
-
-R8_FUZZ_GATES = [
-    "txt_winnow_fingerprints",
-    "txt_kneser_ney",
-    "sketch_moments_chebyshev",
-    "rag_ndcg",
-    "sample_pps_systematic",
-    "profile_gini",
-    "txt_zipf_fit",
-    "txt_gopher_lines",
-    "dedup_winnow_pairs",
-    "clean_html_strip",
-    "privacy_dp_topk",
-    "txt_heaps_fit",
-]
-
-
 @given(texts=st.lists(_DOC, min_size=1, max_size=8))
 @settings(**_SETTINGS)
 def test_gates_parity_on_hostile_corpus(spark, texts):
-    from egraphdb_spark.queries_staged import (
-        STAGED_R9_REGISTRY,
-        STAGED_R10_REGISTRY,
-        STAGED_REGISTRY,
-    )
-
     # one corpus write per example, all gates against it (a per-gate
     # parametrize would pay the corpus write FUZZ_GATES times over)
     sf_dir = _write_corpus(spark, texts)
     failures = []
-    for gate in (
-        FUZZ_GATES + STAGED_FUZZ_GATES + R8_FUZZ_GATES
-        + STAGED_R9_FUZZ_GATES + STAGED_R10_FUZZ_GATES
-    ):
-        fn, sql = {
-            **REGISTRY,
-            **STAGED_REGISTRY,
-            **STAGED_R9_REGISTRY,
-            **STAGED_R10_REGISTRY,
-        }[gate]
+    for gate in FUZZ_GATES:
+        fn, sql = REGISTRY[gate]
         spark_pdf = fn(spark, sf_dir).toPandas()
         oracle_pdf = run_oracle(sql, sf_dir)
         problems = compare(spark_pdf, oracle_pdf)
@@ -369,6 +334,18 @@ EVT_GATES = [
     "skew_salted_join",
     "join_asof_nearest",
     "join_asof_tolerance",
+    "evt_diff_in_diff",
+    # messy-date synthesis + regex/civil-math parse
+    "clean_dates_normalize",
+    "evt_bootstrap_ci",
+    # binning + min-max isotonic fit; CUPED exact-moment adjustment;
+    # split-conformal intervals
+    "clean_isotonic_calibrate",
+    "evt_cuped",
+    "evt_conformal",
+    # hash-sample quantile sketch (ties in value, duplicate event ids, tiny
+    # samples where k clamps to 1)
+    "sketch_sampled_quantiles",
 ]
 
 _ETYPES = ["view", "click", "purchase", "signup", "error"]
@@ -418,42 +395,13 @@ def _write_events(rows) -> str:
     return d
 
 
-# staged round-7 events gate fuzzes here pre-merge
-STAGED_EVT_GATES = ["evt_diff_in_diff"]
-
-# round-8 events gate: messy-date synthesis + regex/civil-math parse
-R8_EVT_GATES = ["clean_dates_normalize", "evt_bootstrap_ci"]
-
-# round-9 staged events gates: binning + min-max isotonic fit; CUPED
-# exact-moment adjustment; split-conformal intervals
-STAGED_R9_EVT_GATES = ["clean_isotonic_calibrate", "evt_cuped", "evt_conformal"]
-
-# round-10 staged events gate: hash-sample quantile sketch (ties in value,
-# duplicate event ids, tiny samples where k clamps to 1)
-STAGED_R10_EVT_GATES = ["sketch_sampled_quantiles"]
-
-
 @given(rows=st.lists(_EVT, min_size=1, max_size=20))
 @settings(**_SETTINGS)
 def test_event_gates_parity_on_tied_timestamps(spark, rows):
-    from egraphdb_spark.queries_staged import (
-        STAGED_R9_REGISTRY,
-        STAGED_R10_REGISTRY,
-        STAGED_REGISTRY,
-    )
-
     sf_dir = _write_events(rows)
     failures = []
-    for gate in (
-        EVT_GATES + STAGED_EVT_GATES + R8_EVT_GATES
-        + STAGED_R9_EVT_GATES + STAGED_R10_EVT_GATES
-    ):
-        fn, sql = {
-            **REGISTRY,
-            **STAGED_REGISTRY,
-            **STAGED_R9_REGISTRY,
-            **STAGED_R10_REGISTRY,
-        }[gate]
+    for gate in EVT_GATES:
+        fn, sql = REGISTRY[gate]
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import SF_SMOKE
 from egraphdb_spark.operators.graph_algos import bfs_levels, connected_components
 
 
@@ -42,7 +43,20 @@ def test_cut_profile_names_the_algorithm_not_the_superstep_loop(spark, monkeypat
     e = _edges(spark, [("a", "b"), ("b", "c"), ("x", "y")])
     connected_components(e).collect()
     assert records
-    assert all(where.startswith("graph_algos.py:") for where, _ in records), records
+    assert all(where.startswith("operators/graph_algos.py:") for where, _ in records), records
+
+
+def test_cut_profile_names_the_gate_module(spark, monkeypatch):
+    """A cut made in a graph gate's own body names gates/graph.py, which
+    a bare file name would confuse with egraphdb_spark/graph.py."""
+    from egraphdb_spark.operators import checkpoint
+    from egraphdb_spark.queries import REGISTRY
+
+    records: list = []
+    monkeypatch.setattr(checkpoint, "_PROFILE", True)
+    monkeypatch.setattr(checkpoint, "PROFILE_RECORDS", records)
+    REGISTRY["graph_kcore"][0](spark, SF_SMOKE)
+    assert any(where.startswith("gates/graph.py:") for where, _ in records), records
 
 
 def test_cc_directed_chain_undirected_semantics(spark):

@@ -48,9 +48,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n, (_fn, sql) in REGISTRY.items() if sql is not None)
-)
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_oracle_output_types_hashable(duck, name):
     _fn, sql = REGISTRY[name]
     rel = duck.sql(sql)
@@ -65,27 +63,3 @@ def test_oracle_output_types_hashable(duck, name):
         "(COVERAGE.md oracle type contract)"
     )
 
-
-def _staged_r10():
-    from egraphdb_spark.queries_staged import STAGED_R10_REGISTRY
-
-    return sorted(
-        n for n, (_fn, sql) in STAGED_R10_REGISTRY.items() if sql is not None
-    )
-
-
-@pytest.mark.parametrize("name", _staged_r10())
-def test_staged_r10_oracle_output_types_hashable(duck, name):
-    from egraphdb_spark.queries_staged import STAGED_R10_REGISTRY
-
-    _fn, sql = STAGED_R10_REGISTRY[name]
-    rel = duck.sql(sql)
-    bad = [
-        (col, str(typ))
-        for col, typ in zip(rel.columns, rel.types)
-        if not str(typ).upper().startswith(_ALLOWED_PREFIXES)
-    ]
-    assert not bad, (
-        f"staged oracle for {name!r} emits driver-unhashable column types "
-        f"{bad}; CAST integer aggregates AS BIGINT / ratios AS DOUBLE"
-    )

@@ -654,19 +654,12 @@ def test_dp_topk_take_ordered_over_group_table(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staged gates (STAGED_R9_REGISTRY — pre-merge plan shapes)
+# Near-duplicate, fusion, calibration and CUPED plan shapes
 # ---------------------------------------------------------------------------
 
 
-def q9(spark, name):
-    from egraphdb_spark.queries_staged import STAGED_R9_REGISTRY
-
-    fn, _ = STAGED_R9_REGISTRY[name]
-    return fn(spark, SF_SMOKE)
-
-
 def test_hamming64_band_join_is_hash_join_not_cartesian(spark):
-    p = plan_of(q9(spark, "dedup_hamming64_pairs"))
+    p = plan_of(q(spark, "dedup_hamming64_pairs"))
     # candidate generation is an equi-join on (band, value) — a hash
     # join with a shuffle/broadcast on the band keys, NEVER all-pairs
     assert "CartesianProduct" not in p
@@ -678,7 +671,7 @@ def test_hamming64_band_join_is_hash_join_not_cartesian(spark):
 
 
 def test_weighted_fusion_topk_and_broadcast_minmax(spark):
-    p = plan_of(q9(spark, "rag_fusion_weighted"))
+    p = plan_of(q(spark, "rag_fusion_weighted"))
     # final top-15 never fully sorts; the per-list min/max scalars attach
     # by broadcast, not shuffle
     assert "TakeOrderedAndProject" in p
@@ -689,7 +682,7 @@ def test_weighted_fusion_topk_and_broadcast_minmax(spark):
 
 
 def test_isotonic_single_data_pass_then_bounded_lattice(spark):
-    p = plan_of(q9(spark, "clean_isotonic_calibrate"))
+    p = plan_of(q(spark, "clean_isotonic_calibrate"))
     # the corpus is touched by ONE binned aggregate (map-side combined);
     # the min-max lattice joins run on <= n_bins-row frames afterwards.
     # events parquet is scanned at most twice (tree + detail print of the
@@ -700,7 +693,7 @@ def test_isotonic_single_data_pass_then_bounded_lattice(spark):
 
 
 def test_dup_structure_no_window_no_join(spark):
-    p = plan_of(q9(spark, "txt_dup_structure"))
+    p = plan_of(q(spark, "txt_dup_structure"))
     # tagged explode + two hash aggregates: no window, no join anywhere
     assert "Window" not in p
     assert "Join" not in p
@@ -708,7 +701,7 @@ def test_dup_structure_no_window_no_join(spark):
 
 
 def test_cuped_moments_broadcast_to_arms(spark):
-    p = plan_of(q9(spark, "evt_cuped"))
+    p = plan_of(q(spark, "evt_cuped"))
     # the 1-row global moments frame attaches to the 2-row arm table by
     # broadcast; both aggregates are map-side combined
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
@@ -717,19 +710,13 @@ def test_cuped_moments_broadcast_to_arms(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged gates (STAGED_R10_REGISTRY — pre-merge plan shapes)
+# Span coverage, phash, feature rerank, sampled quantiles and
+# contamination-span plan shapes
 # ---------------------------------------------------------------------------
 
 
-def q10(spark, name):
-    from egraphdb_spark.queries_staged import STAGED_R10_REGISTRY
-
-    fn, _ = STAGED_R10_REGISTRY[name]
-    return fn(spark, SF_SMOKE)
-
-
 def test_span_coverage_windows_are_per_doc_and_join_is_hash(spark):
-    p = plan_of(q10(spark, "dedup_span_coverage"))
+    p = plan_of(q(spark, "dedup_span_coverage"))
     # the gaps-and-islands windows partition by doc id — a corpus-sized
     # SinglePartition window would serialize the whole corpus
     assert "Exchange SinglePartition" not in p
@@ -742,7 +729,7 @@ def test_span_coverage_windows_are_per_doc_and_join_is_hash(spark):
 
 
 def test_phash_band_join_hash_and_basis_broadcast(spark):
-    p = plan_of(q10(spark, "mm_phash_pairs"))
+    p = plan_of(q(spark, "mm_phash_pairs"))
     # Hamming candidate generation is the proven multi-index equi-join
     # (the phash table itself is lineage-cut before the triple reference,
     # so this plan starts at the checkpointed codes — DCT shape below)
@@ -769,7 +756,7 @@ def test_phash_band_join_hash_and_basis_broadcast(spark):
 
 
 def test_feature_rerank_topk_and_single_retriever_runs(spark):
-    p = plan_of(q10(spark, "rag_feature_rerank"))
+    p = plan_of(q(spark, "rag_feature_rerank"))
     # final top-15 is a TakeOrdered, not a global sort
     assert "TakeOrderedAndProject" in p
     # min/max scalars attach by broadcast
@@ -780,7 +767,7 @@ def test_feature_rerank_topk_and_single_retriever_runs(spark):
 
 
 def test_sampled_quantiles_per_group_window_over_sample(spark):
-    p = plan_of(q10(spark, "sketch_sampled_quantiles"))
+    p = plan_of(q(spark, "sketch_sampled_quantiles"))
     # the rank window partitions by group over the lineage-cut sample;
     # never a SinglePartition exchange anywhere in the plan
     assert "Exchange SinglePartition" not in p
@@ -790,7 +777,7 @@ def test_sampled_quantiles_per_group_window_over_sample(spark):
 
 
 def test_despan_rewrite_anti_join_and_per_doc_rebuild(spark):
-    p = plan_of(q10(spark, "pipe_despan_rewrite"))
+    p = plan_of(q(spark, "pipe_despan_rewrite"))
     # kept tokens come from a LEFT ANTI equi-join on (id, pos); the
     # rebuild groupBy is per doc — no cartesian, no global exchange
     assert "LeftAnti" in p or "left_anti" in p.lower()
@@ -800,7 +787,7 @@ def test_despan_rewrite_anti_join_and_per_doc_rebuild(spark):
 
 
 def test_contam_spans_bench_probe_semi_join(spark):
-    p = plan_of(q10(spark, "dedup_contam_spans"))
+    p = plan_of(q(spark, "dedup_contam_spans"))
     # the benchmark gram set probes the corpus postings via a LEFT SEMI
     # equi-join (broadcast when small); windows per doc; posting tables
     # lineage-cut

@@ -1,8 +1,7 @@
-"""Round-10 staged operators (queries_staged.py STAGED_R10_REGISTRY —
-merge at round 11): exact-substring span-coverage dedup (Lee et al.
-ExactSubstr), DCT perceptual hash pairs, feature-vector rerank, and the
-hash-sample quantile sketch.  Hand-computed cases, defining invariants,
-and full oracle parity for every staged gate."""
+"""Exact-substring span-coverage dedup (Lee et al. ExactSubstr), DCT
+perceptual hash pairs, feature-vector rerank, and the hash-sample quantile
+sketch.  Hand-computed cases and defining invariants; oracle parity is
+test_parity.py's."""
 
 from __future__ import annotations
 
@@ -10,22 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# -------------------------------------------------------------- gate parity
-
-
-def test_r10_staged_gate_parity(spark):
-    from parity import compare, run_oracle
-
-    from egraphdb_spark.queries_staged import STAGED_R10_REGISTRY
-
-    assert len(STAGED_R10_REGISTRY) == 6
-    for name, (fn, sql) in STAGED_R10_REGISTRY.items():
-        sp = fn(spark, SF_DIR).toPandas()
-        problems = compare(sp, run_oracle(sql, SF_DIR))
-        assert not problems, f"{name}: {problems}"
-        assert len(sp) > 0, name
 
 
 # ------------------------------------------------------------ span coverage

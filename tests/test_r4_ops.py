@@ -341,7 +341,7 @@ def test_tfidf_sim_pairs_finds_dup_and_prunes_stop_terms(spark):
 
 def test_ivfpq_full_probe_equals_pq_and_restriction_binds(spark):
     from egraphdb_spark.operators import similarity
-    from egraphdb_spark.queries_pipeline import QUERY_VEC
+    from egraphdb_spark.gates.similarity import QUERY_VEC
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     anchors = similarity.prefix_anchors(emb, "vec_id", "embedding", 8)

@@ -1,9 +1,8 @@
-"""Round-8 gate additions (queries_r8.py): winnowing fingerprints,
-Kneser-Ney bigram smoothing, moments/Chebyshev sketch, NDCG@k, PPS
-systematic sampling, messy-date normalization.  Hand-computed cases,
-defining invariants (winnowing's shared-substring guarantee, Chebyshev's
-bound >= empirical, systematic sampling's exact-k and floor/ceil hit
-counts), and full oracle parity for every gate."""
+"""Winnowing fingerprints, Kneser-Ney bigram smoothing, moments/Chebyshev
+sketch, NDCG@k, PPS systematic sampling, messy-date normalization.
+Hand-computed cases and defining invariants (winnowing's shared-substring
+guarantee, Chebyshev's bound >= empirical, systematic sampling's exact-k
+and floor/ceil hit counts); oracle parity is test_parity.py's."""
 
 from __future__ import annotations
 
@@ -15,22 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# -------------------------------------------------------------- gate parity
-
-
-def test_r8_gate_parity(spark):
-    from parity import compare, run_oracle
-
-    from egraphdb_spark.queries_r8 import R8_REGISTRY
-
-    assert len(R8_REGISTRY) == 15
-    for name, (fn, sql) in R8_REGISTRY.items():
-        sp = fn(spark, SF_DIR).toPandas()
-        problems = compare(sp, run_oracle(sql, SF_DIR))
-        assert not problems, f"{name}: {problems}"
-        assert len(sp) > 0, name
 
 
 # ---------------------------------------------------------------- winnowing
@@ -601,8 +584,7 @@ def test_zipf_degenerate_single_type(spark):
 def test_stream_moments_matches_batch(spark):
     # the streaming power sums must equal a batch groupBy over the same
     # data (availableNow = batch-parity), and merge by addition
-    from egraphdb_spark.queries_r8 import q_stream_moments
-
+    from egraphdb_spark.gates.io_stream import q_stream_moments
     from egraphdb_spark.graph import load_tables
 
     out = {r.window_start: r for r in q_stream_moments(spark, SF_DIR).collect()}

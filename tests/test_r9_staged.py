@@ -1,9 +1,8 @@
-"""Round-9 staged operators (queries_staged.py STAGED_R9_REGISTRY — merge
-at round 10): 64-bit simhash multi-index Hamming join, weighted CombMNZ
-score fusion, isotonic calibration (min-max identity), duplicate
-line/paragraph fractions, CUPED variance-reduced A/B adjustment,
-split-conformal prediction intervals.  Hand-computed cases, defining
-invariants, and full oracle parity for every staged gate."""
+"""64-bit simhash multi-index Hamming join, weighted CombMNZ score fusion,
+isotonic calibration (min-max identity), duplicate line/paragraph
+fractions, CUPED variance-reduced A/B adjustment, split-conformal
+prediction intervals.  Hand-computed cases and defining invariants;
+oracle parity is test_parity.py's."""
 
 from __future__ import annotations
 
@@ -11,22 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# -------------------------------------------------------------- gate parity
-
-
-def test_r9_staged_gate_parity(spark):
-    from parity import compare, run_oracle
-
-    from egraphdb_spark.queries_staged import STAGED_R9_REGISTRY
-
-    assert len(STAGED_R9_REGISTRY) == 6
-    for name, (fn, sql) in STAGED_R9_REGISTRY.items():
-        sp = fn(spark, SF_DIR).toPandas()
-        problems = compare(sp, run_oracle(sql, SF_DIR))
-        assert not problems, f"{name}: {problems}"
-        assert len(sp) > 0, name
 
 
 # ---------------------------------------------------- hamming64 multi-index
@@ -232,7 +215,7 @@ def test_dup_structure_hand_computed(spark):
 
 def test_dup_structure_gate_contract(spark):
     # synthesized variants: 0 and 1 fail, 2 and 3 keep — for ANY corpus
-    from egraphdb_spark.queries_staged import q_txt_dup_structure
+    from egraphdb_spark.gates.text import q_txt_dup_structure
 
     for r in q_txt_dup_structure(spark, SF_DIR).collect():
         v = r.id % 4

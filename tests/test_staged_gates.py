@@ -1,8 +1,7 @@
-"""Round-7 staged operators (queries_staged.py — merged into the live
-registry at round 8): Gopher quality rules, two-sample KS drift, seeded
-Laplace DP counts + clipped DP mean, AMS F₂ sketch, k-truss peeling,
-k-center coreset.  Hand-computed cases, defining invariants, and full oracle parity for
-every staged gate."""
+"""Gopher quality rules, two-sample KS drift, seeded Laplace DP counts +
+clipped DP mean, AMS F₂ sketch, k-truss peeling, k-center coreset
+(gates/text.py, gates/sketch_sample.py, gates/graph.py).  Hand-computed
+cases and defining invariants; oracle parity is test_parity.py's."""
 
 from __future__ import annotations
 
@@ -10,24 +9,6 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-# -------------------------------------------------------------- gate parity
-
-
-def test_staged_gate_parity(spark):
-    from parity import compare, run_oracle
-
-    from egraphdb_spark.queries_staged import STAGED_REGISTRY
-
-    assert len(STAGED_REGISTRY) == 9
-    for name, (fn, sql) in STAGED_REGISTRY.items():
-        sp = fn(spark, SF_DIR).toPandas()
-        problems = compare(sp, run_oracle(sql, SF_DIR))
-        assert not problems, f"{name}: {problems}"
-        assert len(sp) > 0, name
 
 
 # ----------------------------------------------------------- gopher quality

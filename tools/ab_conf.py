@@ -22,8 +22,8 @@ def main() -> None:
     key, val_a, val_b, names = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_AB_REPS", "2"))  # per arm
+    from egraphdb_spark.graph import doc_shingles
     from egraphdb_spark.queries import REGISTRY, fixture
-    from egraphdb_spark.queries_pipeline import doc_shingles
     from egraphdb_spark.session import get_spark
 
     spark = get_spark("egraphdb-ab")

@@ -5,8 +5,9 @@ The driver hard-checks the FIRST 50 registry entries each round; this tool
 picks those 50 by staleness so no gate's latest driver check ages beyond
 the budget (round-6 verdict item 3):
 
-  1. gates NEVER seen in any CORRECTNESS_r*.json window, registry order;
-  2. then gates by OLDEST most-recent driver check (ties: registry order).
+  1. gates NEVER seen in any CORRECTNESS_r*.json window, by name;
+  2. then gates by OLDEST most-recent driver check (ties: by name), so the
+     window does not depend on which module registers a gate.
 
 A gate counts as "checked" in round N if it has a row in CORRECTNESS_rN
 (green or red — a red row is still driver evidence; reds must be re-greened,
@@ -56,10 +57,8 @@ def main() -> None:
 
     latest = load_history(args.repo)
     names = registry_names(args.repo)
-    order = {n: i for i, n in enumerate(names)}
-
-    # Never-checked first (registry order), then oldest-checked first.
-    ranked = sorted(names, key=lambda n: (latest.get(n, -1), order[n]))
+    # Never-checked first, then oldest-checked first; ties by name.
+    ranked = sorted(names, key=lambda n: (latest.get(n, -1), n))
     window = ranked[: args.size]
 
     never = [n for n in window if n not in latest]

@@ -52,8 +52,8 @@ def main() -> None:
         sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "2"))
+    from egraphdb_spark.graph import doc_shingles
     from egraphdb_spark.queries import REGISTRY, fixture
-    from egraphdb_spark.queries_pipeline import doc_shingles
     from egraphdb_spark.session import get_spark
 
     spark = get_spark("egraphdb-profile")

@@ -66,7 +66,6 @@ PROBES = [
     "emb_label_centroids",
     "emb_truncate_recall",
     "emb_drift",
-    # round-4 additions
     "dedup_semantic_pairs",
     "txt_bpe_pair_counts",
     "pipe_assemble",
@@ -92,7 +91,6 @@ PROBES = [
     "graph_lpa",
     "dedup_containment_pairs",
     "join_asof_nearest",
-    # round-4 final session
     "pipe_temperature_mix",
     "pipe_interleave",
     "txt_hash_embedding",
@@ -130,7 +128,6 @@ PROBES = [
     "win_time_range",
     "io_partition_prune",
     "agg_listagg",
-    # round-4 final gates missed at enrollment (judge ADVICE r4)
     "evt_funnel_steps",
     "evt_cohort_ltv",
     "evt_holt",
@@ -171,14 +168,12 @@ PROBES = [
     "txt_bpe_train",
     "txt_bpe_fertility",
     "txt_bpe_vocab_tokens",
-    # round-6 additions
     "privacy_t_closeness",
     "pipe_epoch_shuffle",
     "profile_drift_psi",
     "clean_unicode_normalize",
     "dedup_cdc_chunks",
     "rag_mmr_rerank",
-    # round-7 staged gates (queries_staged.py; merge at round 8)
     "txt_gopher_quality",
     "profile_drift_ks",
     "privacy_dp_counts",
@@ -188,7 +183,6 @@ PROBES = [
     "privacy_dp_mean",
     "clean_url_canon",
     "evt_diff_in_diff",
-    # round-8 additions (queries_r8.py)
     "txt_winnow_fingerprints",
     "txt_kneser_ney",
     "sketch_moments_chebyshev",
@@ -204,14 +198,12 @@ PROBES = [
     "clean_html_strip",
     "privacy_dp_topk",
     "txt_heaps_fit",
-    # round-9 staged gates (queries_staged.py STAGED_R9_REGISTRY)
     "dedup_hamming64_pairs",
     "rag_fusion_weighted",
     "clean_isotonic_calibrate",
     "txt_dup_structure",
     "evt_cuped",
     "evt_conformal",
-    # round-10 staged gates (queries_staged.py STAGED_R10_REGISTRY)
     "dedup_span_coverage",
     "mm_phash_pairs",
     "rag_feature_rerank",
@@ -244,20 +236,8 @@ def build(spark, k: int, dst: str) -> None:
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     only = sys.argv[2:]
-    from egraphdb_spark.queries import REGISTRY as _LIVE, fixture
-    from egraphdb_spark.queries_staged import (
-        STAGED_R9_REGISTRY,
-        STAGED_R10_REGISTRY,
-        STAGED_REGISTRY,
-    )
-
-    REGISTRY = {
-        **_LIVE,
-        **STAGED_REGISTRY,
-        **STAGED_R9_REGISTRY,
-        **STAGED_R10_REGISTRY,
-    }
-    from egraphdb_spark.queries_pipeline import doc_shingles
+    from egraphdb_spark.graph import doc_shingles
+    from egraphdb_spark.queries import REGISTRY, fixture
     from egraphdb_spark.session import get_spark
 
     spark = get_spark("scale-probe")

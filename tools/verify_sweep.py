@@ -23,8 +23,7 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--staged"]
-    staged = "--staged" in sys.argv[1:]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = args[1:]
 
@@ -50,21 +49,6 @@ def main() -> int:
 
     qs = dict(entry.queries())
     oracles = dict(entry.oracle_sql())
-    if staged:
-        # pre-merge sweep of queries_staged.py, same compare as the driver
-        # (STAGED_REGISTRY / STAGED_R9_REGISTRY are merged-live since
-        # r8/r10 — harmless re-adds; STAGED_R10_REGISTRY is the round-10
-        # pre-merge batch)
-        from egraphdb_spark.queries_staged import (
-            STAGED_R9_REGISTRY,
-            STAGED_R10_REGISTRY,
-            STAGED_REGISTRY,
-        )
-
-        for reg in (STAGED_REGISTRY, STAGED_R9_REGISTRY, STAGED_R10_REGISTRY):
-            for n, (fn, sql) in reg.items():
-                qs[n] = fn
-                oracles[n] = sql
     names = [n for n in qs if not only or any(s in n for s in only)]
     print(f"registry: {len(qs)} queries, {len(oracles)} oracles; running {len(names)}")
 
@@ -73,10 +57,7 @@ def main() -> int:
         t0 = time.perf_counter()
         try:
             spark_pdf = qs[name](spark, sf_dir).toPandas()
-            sql = oracles.get(name)
-            problems = (
-                compare(spark_pdf, run_oracle(sql, sf_dir)) if sql else []
-            )
+            problems = compare(spark_pdf, run_oracle(oracles[name], sf_dir))
         except Exception as exc:  # noqa: BLE001 — report, keep sweeping
             problems = [f"EXC {type(exc).__name__}: {exc}"]
         dt = time.perf_counter() - t0
