@@ -18,7 +18,9 @@ value-hash comparison exact:
 The gates live one module per family under ``gates/``, each exporting a
 ``GATES`` dict of name -> (spark_fn, oracle_sql).  The per-session inputs
 they read (tables, graph fixture, shingle table) are memoised in graph.py;
-``fixture`` is re-exported here for the benchmark and tools.
+``fixture`` is re-exported here for the benchmark and tools.  The graph
+and search gates run on that fixture; their oracles re-derive the same
+facts relationally.
 """
 
 from __future__ import annotations
