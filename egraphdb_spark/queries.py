@@ -38,7 +38,9 @@ from .gates import (
 )
 from .graph import fixture  # noqa: F401  (re-export)
 
-FAMILIES = (search, graph, relational, events, io_stream, text, dedup, similarity, sketch_sample)
+FAMILIES = (
+    search, graph, relational, events, io_stream, text, dedup, similarity, sketch_sample,
+)
 
 # The driver hard-checks the FIRST 50 gates in registry order; the window
 # rotates per round so every gate's driver evidence stays recent.  Emitted

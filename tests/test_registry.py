@@ -45,7 +45,9 @@ def test_driver_window_leads_the_registry():
 
 
 def test_every_gate_has_an_oracle():
-    missing = [n for n, (_fn, sql) in REGISTRY.items() if not (isinstance(sql, str) and sql.strip())]
+    missing = [
+        n for n, (_fn, sql) in REGISTRY.items() if not (isinstance(sql, str) and sql.strip())
+    ]
     assert not missing
 
 
