@@ -415,7 +415,7 @@ def q_dedup_near_clusters(spark, sf_dir):
         F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src_key"),
         F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst_key"),
     )
-    cc = connected_components(edges, undirected=True)
+    cc = connected_components(edges)
     return (
         cc.groupBy("component")
         .agg(F.count("*").alias("n_members"))
@@ -530,7 +530,7 @@ def q_dedup_canonical_corpus(spark, sf_dir):
         F.lpad(F.col("id_a").cast("string"), 12, "0").alias("src_key"),
         F.lpad(F.col("id_b").cast("string"), 12, "0").alias("dst_key"),
     )
-    cc = connected_components(edges, undirected=True)
+    cc = connected_components(edges)
     dropped = cc.where(F.col("key") != F.col("component")).select(
         F.col("key").cast("long").alias("doc_id")
     )

@@ -93,7 +93,7 @@ def q_graph_cc(spark, sf_dir):
     membership = g.edges.where(
         F.get_json_object("details", "$.rel") == "in_region"
     )
-    return connected_components(membership, undirected=True)
+    return connected_components(membership)
 
 
 O_GRAPH_CC = """
@@ -541,7 +541,7 @@ def q_graph_modularity(spark, sf_dir):
             F.get_json_object("details", "$.rel") == "in_region"
         ).select("src_key", "dst_key")
     )
-    comm = connected_components(membership, undirected=True).select(
+    comm = connected_components(membership).select(
         "key", F.col("component").alias("community")
     )
     e = membership.select("src_key", "dst_key")
@@ -1030,7 +1030,7 @@ def q_graph_ktruss(spark, sf_dir):
     graph_algos.py ktruss_peel; oracle unrolls identical rounds).
     Completes the cohesion ladder: degree (k-core) → triangle support
     (k-truss); the multi-round CASCADE path is pinned by the pytest
-    triangle-chain case (tests/test_staged_gates.py).  rounds=1 because
+    triangle-chain case (tests/test_graph_algos.py).  rounds=1 because
     k=3 reaches its fixpoint in ONE peel by construction — every edge of
     a triangle is kept alive by that same triangle, so survivors'
     supports cannot drop; deeper k (pytest) is where extra rounds do
@@ -1053,13 +1053,14 @@ def q_graph_ktruss(spark, sf_dir):
     aug = e.unionByName(shortcuts).select(
         F.col("src_key").alias("a"), F.col("dst_key").alias("b")
     )
-    # pre_deduped=True was TRIED and measured SLOWER in order-alternating
-    # same-session A/B at sf0.1 (old 7.1/8.0/8.2 s vs new 9.7/12.5 s,
-    # quiet host): the aug pair set is provably duplicate-free (the
-    # harmonic/betweenness structural proof), but the distinct's shuffle
-    # also re-partitions the 67-small-partition cached-edge projection
-    # into 16 compact AQE-coalesced partitions, and the wedge self-join
-    # downstream is worth more than the dedup costs.  Keep the distinct.
+    # ktruss_peel deduplicates its input.  Skipping that distinct was
+    # TRIED and measured SLOWER in order-alternating same-session A/B at
+    # sf0.1 (with 7.1/8.0/8.2 s vs without 9.7/12.5 s, quiet host): the
+    # aug pair set is provably duplicate-free (the harmonic/betweenness
+    # structural proof), but the distinct's shuffle also re-partitions
+    # the 67-small-partition cached-edge projection into 16 compact
+    # AQE-coalesced partitions, and the wedge self-join downstream is
+    # worth more than the dedup costs.
     return ktruss_peel(aug, k=3, rounds=1)
 
 

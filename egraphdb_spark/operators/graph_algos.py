@@ -12,13 +12,30 @@ joins + groupBy min, which Catalyst compiles to shuffle-efficient plans:
     map-side combined so the shuffle carries one label per (dst, partition))
   * iterate until fixpoint, localCheckpoint per round to cut lineage
 
-The loops shared by several operators — delta label propagation to a
-fixpoint (CC, SSSP, SCC coloring) and the level-synchronous frontier
-walk with a visited set (BFS levels, SCC's backward walk) — run on
-:mod:`.supersteps`, which alone decides when such a loop cuts lineage and
-how it tests for the end.  The fixed-round loops (PageRank, PPR, HITS,
-LPA, k-core, k-truss) are one step plus one cut each and stay inline, as
-do the MS-BFS level bodies of the centralities.
+Each job that several operators do is written once:
+
+  * the loops — delta label propagation to a fixpoint (CC, SSSP, SCC
+    coloring) and the level-synchronous frontier walk with a visited set
+    (BFS levels, SCC's backward walk) — run on :mod:`.supersteps`, which
+    alone decides when such a loop cuts lineage and how it tests for the
+    end;
+  * :func:`_triangles` enumerates triangles for the census
+    (``triangle_stats``) and for every k-truss support round;
+  * :func:`_adjacency` is the undirected neighbour table of neighbour
+    Jaccard, Adamic–Adar and the walks;
+  * :func:`_node_keymap` maps xxhash64 ids back to keys for every
+    operator that iterates on ids and hashes the key itself;
+  * one local ``gather`` runs both half-rounds of HITS.
+
+Kept separate: the fixed-round loops (PageRank, PPR, HITS, LPA, k-core,
+k-truss) are one step plus one cut each and stay inline, as do the MS-BFS
+level bodies of the centralities.  PageRank keeps its own loop rather
+than running as PPR with every node seeded, which was measured slower
+(ROADMAP item 2).  k-core's fallback mapback reads the caller's own
+``src``/``dst`` ids, which need not be hashes of the key.
+
+CC, LPA, neighbour Jaccard, Adamic–Adar and the walks work on the
+undirected closure of their edges; SCC is the directed operator.
 
 Labels are *keys* (strings), not engine-specific hashes, so results are
 engine-portable (xxhash64 ids differ per seed across engines).
@@ -47,20 +64,30 @@ def _endpoints(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, undirected: bool = True
-) -> DataFrame:
-    """(key, component) — component = lexicographically-min key reachable.
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """Distinct ``(node, nbr)`` pairs of the undirected closure of the
+    ``(src_key, dst_key)`` edges: every neighbour of every node, once."""
+    return (
+        _symmetrize(edges.select("src_key", "dst_key"))
+        .select(F.col("src_key").alias("node"), F.col("dst_key").alias("nbr"))
+        .distinct()
+    )
+
+
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """(key, component) — component = lexicographically-min key reachable
+    over the undirected closure of the edges.
 
     Hash-min label propagation over (src_key, dst_key), run by
     :func:`~.supersteps.delta_fixpoint`: only nodes whose label dropped
     last round send.  Converges in O(diameter) rounds; each round is one
     join + one min-aggregate.
     """
-    e = edges.select("src_key", "dst_key")
-    if undirected:
-        e = _symmetrize(e)
-    e = e.distinct().transform(cut_lineage_lazy)
+    e = (
+        _symmetrize(edges.select("src_key", "dst_key"))
+        .distinct()
+        .transform(cut_lineage_lazy)
+    )
     labels = _endpoints(e).select("key", F.col("key").alias("component"))
 
     def send(senders: DataFrame) -> DataFrame:
@@ -402,28 +429,68 @@ def harmonic_centrality(
     )
 
 
-def triangle_stats(edges: DataFrame, orientation: str = "degree") -> DataFrame:
+def _degrees(und: DataFrame) -> DataFrame:
+    """(key, deg) of the canonical edge set ``und`` (distinct a < b)."""
+    return (
+        und.select(F.col("a").alias("key"))
+        .unionByName(und.select(F.col("b").alias("key")))
+        .groupBy("key")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """Every triangle of the canonical edge set ``und`` (distinct
+    ``(a, b)`` pairs, a < b, no self-loops), exactly once, as
+    ``(w_mid, w_src, w_dst, a, b)``: the wedge w_src → w_mid → w_dst and
+    its closing edge ``(a, b)`` in canonical order.
+
+    Suri & Vassilvitskii (WWW'11, MapReduce triangle counting): orient
+    each edge low-degree → high-degree, ties by key — a total order, so
+    the oriented graph is acyclic and every triangle has exactly one
+    "source" vertex with two out-edges.  Join the oriented edges on the
+    middle vertex to enumerate wedges, then semi-join the closing edge.
+    The degree order bounds a vertex's wedge fanout by its *oriented*
+    out-degree, O(√m) on any graph: a hub of degree d contributes C(d,2)
+    wedges under the key order (a < b < c) but only ~m/d here, which is
+    what keeps the wedge join tractable on skewed graphs.
+
+    Shuffles: one degree aggregate, two degree joins, the wedge join and
+    the closing semi-join.
+    """
+    deg = _degrees(und)
+    da = deg.select(F.col("key").alias("a"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("key").alias("b"), F.col("deg").alias("deg_b"))
+    fwd = F.struct("deg_a", "a") < F.struct("deg_b", "b")
+    oriented = (
+        und.join(da, "a")
+        .join(db, "b")
+        .select(
+            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+        .transform(cut_lineage_lazy)
+    )
+    e1 = oriented.select(F.col("u").alias("w_src"), F.col("v").alias("w_mid"))
+    e2 = oriented.select(F.col("u").alias("w_mid"), F.col("v").alias("w_dst"))
+    wedges = e1.join(e2, "w_mid").withColumns(
+        {"a": F.least("w_src", "w_dst"), "b": F.greatest("w_src", "w_dst")}
+    )
+    return wedges.join(und, ["a", "b"], "left_semi")
+
+
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact global triangle census of the undirected simple graph.
 
     One row: ``n_vertices, n_edges, n_wedges, n_triangles,
     clustering_millionths`` (global clustering coefficient = 3T/wedges in
-    exact integer millionths; wedges = Σ_v C(deg(v), 2)).
+    exact integer millionths; wedges = Σ_v C(deg(v), 2)).  Triangles come
+    from the degree-oriented enumeration of :func:`_triangles`.
 
-    Algorithm (Suri & Vassilvitskii, WWW'11 — MapReduce triangle counting):
-    orient each undirected edge, join oriented edges on the middle vertex to
-    enumerate directed wedges, then semi-join the closing edge.  Each
-    triangle is produced exactly once.
-
-    ``orientation="degree"`` (default) orients low-degree → high-degree
-    (ties by key): wedge fanout per vertex is then bounded by its *oriented*
-    out-degree ≤ O(sqrt(m)) on any graph, which is what keeps the wedge join
-    tractable at 100 TB — a hot celebrity vertex of degree d contributes
-    C(d,2) wedges under id-orientation but only ~m/d under degree
-    orientation.  ``orientation="id"`` is the textbook a<b<c variant.
-
-    Shuffle budget: canonical dedup (1), degree agg (1), two joins on
-    vertex keys.  All counting is integer; triangle count is
-    orientation-invariant, so oracles may use the simple id-ordered form.
+    Shuffle budget: canonical dedup (1), degree agg (1), the joins of
+    :func:`_triangles`.  All counting is integer; the triangle count does
+    not depend on the orientation, so oracles may use the simple
+    key-ordered form.
     """
     und = (
         edges.select(
@@ -434,40 +501,8 @@ def triangle_stats(edges: DataFrame, orientation: str = "degree") -> DataFrame:
         .distinct()
         .transform(cut_lineage_lazy)
     )
-
-    deg = (
-        und.select(F.col("a").alias("key"))
-        .unionByName(und.select(F.col("b").alias("key")))
-        .groupBy("key")
-        .agg(F.count("*").alias("deg"))
-    )
-
-    if orientation == "degree":
-        da = deg.select(F.col("key").alias("a"), F.col("deg").alias("deg_a"))
-        db = deg.select(F.col("key").alias("b"), F.col("deg").alias("deg_b"))
-        ranked = und.join(da, "a").join(db, "b")
-        # orient u→v iff (deg, key) of u < of v — a total order, so the
-        # oriented graph is acyclic and every triangle has exactly one
-        # "source" vertex with two out-edges.
-        fwd = F.struct("deg_a", "a") < F.struct("deg_b", "b")
-        oriented = ranked.select(
-            F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-        )
-    elif orientation == "id":
-        oriented = und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    else:
-        raise ValueError(f"orientation must be 'degree' or 'id': {orientation!r}")
-    oriented = oriented.transform(cut_lineage_lazy)
-
-    e1 = oriented.select(F.col("u").alias("w_src"), F.col("v").alias("w_mid"))
-    e2 = oriented.select(F.col("u").alias("w_mid"), F.col("v").alias("w_dst"))
-    wedges2 = e1.join(e2, "w_mid").select(
-        F.least("w_src", "w_dst").alias("a"), F.greatest("w_src", "w_dst").alias("b")
-    )
-    tri = wedges2.join(und, ["a", "b"], "left_semi").agg(
-        F.count("*").alias("n_triangles")
-    )
+    deg = _degrees(und)
+    tri = _triangles(und).agg(F.count("*").alias("n_triangles"))
 
     base = (
         und.agg(F.count("*").alias("n_edges"))
@@ -495,19 +530,24 @@ def triangle_stats(edges: DataFrame, orientation: str = "degree") -> DataFrame:
 
 
 def kcore_peel(
-    edges: DataFrame, k: int, rounds: int, checkpoint: bool = True,
-    keymap: DataFrame | None = None,
+    edges: DataFrame, k: int, rounds: int, keymap: DataFrame | None = None
 ) -> DataFrame:
     """R-round k-core peel: (key, degree) of nodes surviving ``rounds``
     iterations of "drop every node with degree < k in the current induced
     subgraph".
 
-    Fixed round count (no convergence test) so an external SQL oracle can
-    unroll the identical computation: every true k-core member survives any
-    number of rounds, and once node-sets stabilize the result IS the k-core
-    (the convergence pytest asserts that on the fixture).  Each round is
-    one degree aggregate + two semi-joins on the surviving node set —
-    aggregateMessages shape, no driver state beyond the loop counter.
+    Fixed round budget so an external SQL oracle can unroll the identical
+    computation: every true k-core member survives any number of rounds,
+    and once node-sets stabilize the result IS the k-core (the convergence
+    pytest asserts that on the fixture).  The loop stops early only at
+    that fixpoint, where every further round is the identity.  Each round
+    is one degree aggregate + two semi-joins on the surviving node set —
+    aggregateMessages shape.
+
+    ``edges`` carries integer node ids ``src``/``dst`` beside the keys.
+    A ``keymap`` (see :func:`_node_keymap`) requires them to be
+    ``node_id(key)``, i.e. xxhash64 of the key; without one the mapback
+    reads the ids from ``edges``, so any injective id assignment works.
 
     Scale: node-set frames shrink monotonically; localCheckpoint per round
     keeps the plan linear in rounds, not exponential.  At 100 TB the edge
@@ -517,9 +557,7 @@ def kcore_peel(
     not two key strings.
     """
     if keymap is not None:
-        # caller-supplied node-key frame (see _node_keymap): node_id()
-        # IS xxhash64(key), so the same mapback contract applies — the
-        # final join is inner on surviving ids, extra keys harmless
+        # the final join is inner on surviving ids, extra keys harmless
         keymap = _node_keymap(keymap)
     else:
         keymap = (
@@ -529,38 +567,38 @@ def kcore_peel(
             )
             .distinct()
         )
-    und = _symmetrize(
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b")), "a", "b"
-    ).distinct()
-    if checkpoint:
-        und = und.transform(cut_lineage)
-    e = und
+    e = (
+        _symmetrize(
+            edges.select(F.col("src").alias("a"), F.col("dst").alias("b")), "a", "b"
+        )
+        .distinct()
+        .transform(cut_lineage)
+    )
     prev_cnt = None
     for _ in range(rounds):
+        # the round's degree aggregate is materialized ONCE — both
+        # endpoint semi-joins read it; left lazy it is recomputed per
+        # join (two full degree aggregates per round)
         alive = (
             e.groupBy("a")
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= k)
             .select("a")
+            .transform(cut_lineage)
         )
-        if checkpoint:
-            # materialize the round's degree aggregate ONCE — both
-            # endpoint semi-joins read it; left lazy it is recomputed
-            # per join (two full degree aggregates per round)
-            alive = alive.transform(cut_lineage)
-        e = e.join(alive, "a", "left_semi").join(
-            alive.select(F.col("a").alias("b")), "b", "left_semi"
+        e = (
+            e.join(alive, "a", "left_semi")
+            .join(alive.select(F.col("a").alias("b")), "b", "left_semi")
+            .transform(cut_lineage)
         )
-        if checkpoint:
-            e = e.transform(cut_lineage)
-            # fixpoint early-exit: an unchanged edge count means no node
-            # fell below k this round, so every further round is the
-            # identity — the remaining iterations of the oracle's unroll
-            # are no-ops on the same set, result-identical by definition
-            cnt = e.count()
-            if cnt == prev_cnt:
-                break
-            prev_cnt = cnt
+        # fixpoint early-exit: an unchanged edge count means no node
+        # fell below k this round, so every further round is the
+        # identity — the remaining iterations of the oracle's unroll
+        # are no-ops on the same set, result-identical by definition
+        cnt = e.count()
+        if cnt == prev_cnt:
+            break
+        prev_cnt = cnt
     deg = e.groupBy("a").agg(F.count("*").alias("degree"))
     return deg.join(keymap, deg.a == keymap.nid).select(
         F.col("key"), F.col("degree")
@@ -599,19 +637,18 @@ def degree_stats(edges: DataFrame) -> DataFrame:
 
 
 def label_propagation(
-    edges: DataFrame, rounds: int, undirected: bool = True,
-    keymap: DataFrame | None = None,
+    edges: DataFrame, rounds: int, keymap: DataFrame | None = None
 ) -> DataFrame:
-    """Synchronous mode-label propagation (LPA community detection).
+    """Synchronous mode-label propagation (LPA community detection) over
+    the undirected closure of the edges.
 
     Raghavan et al. 2007, made deterministic: each round EVERY node adopts
     the most frequent label among its neighbors (ties → lexicographically
-    smallest label), all updates applied simultaneously; isolated nodes
-    keep their label.  Labels are node KEYS (strings) end-to-end — the
-    module's engine-portable convention — and the mode argmax is
-    `min_by(lbl, struct(-count, lbl))`, a MAP-SIDE-COMBINABLE aggregate:
-    one row per (dst, partition) on the shuffle, never a window sort over
-    the full message stream, and no integer-id mapping joins.
+    smallest label), all updates applied simultaneously.  Labels are node
+    KEYS (strings) end-to-end — the module's engine-portable convention —
+    and the mode argmax is `min_by(lbl, struct(-count, lbl))`, a
+    MAP-SIDE-COMBINABLE aggregate: one row per (dst, partition) on the
+    shuffle, never a window sort over the full message stream.
 
     Scale per round: one edge-sized message join (co-located when edges
     are bucketed by src) + two partial aggregates; labels localCheckpoint
@@ -619,7 +656,7 @@ def label_propagation(
     (unrolled identically by the SQL oracle) keeps parity exact whether or
     not the labels have converged — same discipline as kcore/pagerank.
 
-    Undirected path optimizations (result-identical, oracle-verified):
+    Optimizations (result-identical, oracle-verified):
       * Round 1 collapses algebraically: the initial labels are the
         identity (lbl(v) = key(v)), so the message stream IS the distinct
         edge set — every (dst, lbl) pair has count 1 and the mode argmax
@@ -630,83 +667,51 @@ def label_propagation(
         discipline) with the label STRING as payload — ties still break
         on the lexicographically smallest label, so results are unchanged
         while the join keys and grouping keys shuffle as integers.  The
-        id→key map joins back once on the final node-sized frame.
+        id→key map (:func:`_node_keymap`) joins back once on the final
+        node-sized frame.
     """
-    if undirected:
-        sym = _symmetrize(edges.select("src_key", "dst_key"))
-        # distinct directed pairs in id space; the src KEY string rides
-        # along as the round-1 label payload (functionally determined by
-        # src, so whichever duplicate row survives carries the same value)
-        pairs = (
-            sym.select(
-                F.xxhash64("src_key").alias("src"),
-                F.xxhash64("dst_key").alias("dst"),
-                F.col("src_key").alias("lbl"),
-            )
-            .dropDuplicates(["src", "dst"])
-            .transform(cut_lineage)
+    sym = _symmetrize(edges.select("src_key", "dst_key"))
+    # distinct directed pairs in id space; the src KEY string rides
+    # along as the round-1 label payload (functionally determined by
+    # src, so whichever duplicate row survives carries the same value)
+    pairs = (
+        sym.select(
+            F.xxhash64("src_key").alias("src"),
+            F.xxhash64("dst_key").alias("dst"),
+            F.col("src_key").alias("lbl"),
         )
-        if rounds < 1:
-            return (
-                pairs.select(F.col("lbl").alias("key"))
-                .distinct()
-                .select("key", F.col("key").alias("community"))
-            )
+        .dropDuplicates(["src", "dst"])
+        .transform(cut_lineage)
+    )
+    if rounds < 1:
+        return (
+            pairs.select(F.col("lbl").alias("key"))
+            .distinct()
+            .select("key", F.col("key").alias("community"))
+        )
+    labels = (
+        pairs.groupBy("dst")
+        .agg(F.min("lbl").alias("lbl"))
+        .withColumnRenamed("dst", "nid")
+        .transform(cut_lineage)
+    )
+    e_ids = pairs.select("src", "dst")
+    for _ in range(rounds - 1):
+        msgs = e_ids.join(
+            labels.select(F.col("nid").alias("src"), "lbl"), "src"
+        ).select(F.col("dst").alias("nid"), "lbl")
+        counts = msgs.groupBy("nid", "lbl").agg(F.count("*").alias("c"))
         labels = (
-            pairs.groupBy("dst")
-            .agg(F.min("lbl").alias("lbl"))
-            .withColumnRenamed("dst", "nid")
-            .transform(cut_lineage)
-        )
-        e_ids = pairs.select("src", "dst")
-        for _ in range(rounds - 1):
-            msgs = e_ids.join(
-                labels.select(F.col("nid").alias("src"), "lbl"), "src"
-            ).select(F.col("dst").alias("nid"), "lbl")
-            counts = msgs.groupBy("nid", "lbl").agg(F.count("*").alias("c"))
-            labels = (
-                counts.groupBy("nid")
-                .agg(
-                    F.min_by(
-                        "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
-                    ).alias("lbl")
-                )
-                .transform(cut_lineage)
-            )
-        # mapback: caller-supplied node-key frame when available (see
-        # _node_keymap — labels anchor the inner join, extra keys
-        # harmless), else a distinct over the edge-sized pair table
-        km = (
-            _node_keymap(keymap)
-            if keymap is not None
-            else pairs.select(
-                F.col("src").alias("nid"), F.col("lbl").alias("key")
-            ).distinct()
-        )
-        return labels.join(km, "nid").select(
-            "key", F.col("lbl").alias("community")
-        )
-    e = edges.select("src_key", "dst_key").distinct().transform(cut_lineage)
-    labels = _endpoints(e).select("key", F.col("key").alias("lbl"))
-    for _ in range(rounds):
-        msgs = e.join(
-            labels.select(F.col("key").alias("src_key"), "lbl"), "src_key"
-        ).select(F.col("dst_key").alias("key"), "lbl")
-        counts = msgs.groupBy("key", "lbl").agg(F.count("*").alias("c"))
-        best = (
-            counts.groupBy("key")
+            counts.groupBy("nid")
             .agg(
                 F.min_by(
                     "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
-                ).alias("new_lbl")
+                ).alias("lbl")
             )
-        )
-        labels = (
-            labels.join(best, "key", "left")
-            .select("key", F.coalesce("new_lbl", "lbl").alias("lbl"))
             .transform(cut_lineage)
         )
-    return labels.select("key", F.col("lbl").alias("community"))
+    km = _node_keymap(keymap, sym, symmetric=True)
+    return labels.join(km, "nid").select("key", F.col("lbl").alias("community"))
 
 
 def modularity_micro(edges: DataFrame, communities: DataFrame) -> DataFrame:
@@ -769,9 +774,9 @@ def neighbor_jaccard_pairs(
     edges: DataFrame,
     threshold: float,
     max_degree: int = 100,
-    undirected: bool = True,
 ) -> DataFrame:
-    """Node-similarity / link-prediction pairs: Jaccard over NEIGHBOR sets.
+    """Node-similarity / link-prediction pairs: Jaccard over NEIGHBOR sets
+    of the undirected closure of the edges.
 
     (a, b, jaccard) for node pairs sharing ≥ 1 neighbor, J = |N(a)∩N(b)|
     / |N(a)∪N(b)| ≥ threshold — the structural-equivalence score behind
@@ -787,13 +792,8 @@ def neighbor_jaccard_pairs(
     Shuffles: degree aggregate, pair-count aggregate on (a, b), two
     id-keyed degree joins — all linear in the guarded candidate set.
     """
-    e = edges.select("src_key", "dst_key")
-    if undirected:
-        e = _symmetrize(e)
-    # adjacency as (node, neighbor), deduped; guard drops HUB NEIGHBORS
-    adj = e.select(
-        F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
-    ).distinct()
+    adj = _adjacency(edges)
+    # the guard drops HUB NEIGHBORS
     small = (
         adj.groupBy("nbr")
         .agg(F.count("*").alias("nbr_deg"))
@@ -827,21 +827,18 @@ def neighbor_jaccard_pairs(
     )
 
 
-def deterministic_walks(
-    edges: DataFrame,
-    steps: int = 4,
-    undirected: bool = True,
-) -> DataFrame:
+def deterministic_walks(edges: DataFrame, steps: int = 4) -> DataFrame:
     """Hash-driven uniform random walks from every node — the node2vec /
     DeepWalk sampling primitive (p = q = 1) made REPRODUCIBLE: at node v
     on step t of the walk started at s, the next neighbor is
     ``sorted_neighbors(v)[ h60(s:t:v) mod deg(v) ]`` with h60 the
     engine's portable 60-bit md5 hash — so any engine (and any re-run)
     derives the identical corpus of walks, which is what makes
-    walk-generated training data auditable.
+    walk-generated training data auditable.  Walks run on the undirected
+    closure of the edges, so no walk meets a dead end.
 
     Output: (walk_id, step, node) — walk_id is the start key, step 0 is
-    the start itself.  Directed dead-ends simply end the walk early.
+    the start itself.
 
     Scale: per step one equi-join keyed on the current node against the
     indexed adjacency (row_number-per-node neighbor ranks, one window
@@ -862,12 +859,7 @@ def deterministic_walks(
 
     if steps < 1:
         raise ValueError("steps must be >= 1")
-    e = edges.select("src_key", "dst_key")
-    if undirected:
-        e = _symmetrize(e)
-    adj = e.select(
-        F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
-    ).distinct()
+    adj = _adjacency(edges)
     w = Window.partitionBy("node").orderBy("nbr")
     ai = adj.select(
         "node",
@@ -916,9 +908,9 @@ def adamic_adar_pairs(
     edges: DataFrame,
     min_common: int = 2,
     max_degree: int = 100,
-    undirected: bool = True,
 ) -> DataFrame:
-    """Link-prediction pairs scored by Adamic–Adar: AA(a,b) =
+    """Link-prediction pairs scored by Adamic–Adar over the undirected
+    closure of the edges: AA(a,b) =
     Σ_{z ∈ N(a)∩N(b)} 1/ln(deg(z)) (Adamic & Adar '03) — common neighbors
     weighted inversely by how promiscuous they are, so a shared rare
     neighbor says more than a shared hub.  The complement of
@@ -941,12 +933,7 @@ def adamic_adar_pairs(
 
     Output: (node_a, node_b, common, aa_nano) with node_a < node_b.
     """
-    e = edges.select("src_key", "dst_key")
-    if undirected:
-        e = _symmetrize(e)
-    adj = e.select(
-        F.col("src_key").alias("node"), F.col("dst_key").alias("nbr")
-    ).distinct()
+    adj = _adjacency(edges)
     deg = adj.groupBy("node").agg(F.count("*").alias("d"))
     contrib = (
         adj.join(
@@ -1028,42 +1015,30 @@ def hits_scaled(edges: DataFrame, iters: int = 3, scale: int = 10**6) -> DataFra
     hub = e.select(F.col("src_key").alias("key")).distinct().select(
         "key", F.lit(scale).cast("long").alias("h")
     )
-    auth = None
     # SQL `div` (JVM long division) — exact at ANY magnitude below the
     # overflow bound, unlike the double-path _intdiv which drifts past 2^53
     norm_expr = F.expr(
         f"cast(coalesce((s * {int(scale)}) div nullif(mx, 0), 0) as bigint)"
     )
+
+    def gather(scores: DataFrame, frm: str, to: str, out: str) -> DataFrame:
+        # one half-round: scatter each (key, score) along e from its `frm`
+        # end, sum per `to` end, L∞-normalize into column `out`
+        raw = (
+            e.join(scores, e[frm] == scores["key"])
+            .groupBy(to)
+            .agg(F.sum(scores.columns[1]).alias("s"))
+        )
+        mx = raw.agg(F.max("s").alias("mx"))
+        return raw.crossJoin(F.broadcast(mx)).select(
+            F.col(to).alias("key"), norm_expr.alias(out)
+        )
+
     for _ in range(iters):
-        a_raw = (
-            e.join(hub, e["src_key"] == hub["key"])
-            .groupBy("dst_key")
-            .agg(F.sum("h").alias("s"))
-        )
-        a_max = a_raw.agg(F.max("s").alias("mx"))
-        auth = (
-            a_raw.crossJoin(F.broadcast(a_max))
-            .select(
-                F.col("dst_key").alias("key"),
-                norm_expr.alias("a"),
-            )
-            # no checkpoint: consumed once by h_raw (the final select
-            # re-derives only the last round)
-        )
-        h_raw = (
-            e.join(auth, e["dst_key"] == auth["key"])
-            .groupBy("src_key")
-            .agg(F.sum("a").alias("s"))
-        )
-        h_max = h_raw.agg(F.max("s").alias("mx"))
-        hub = (
-            h_raw.crossJoin(F.broadcast(h_max))
-            .select(
-                F.col("src_key").alias("key"),
-                norm_expr.alias("h"),
-            )
-            .transform(cut_lineage)
-        )
+        # auth is not cut: consumed once by the hub half (the final
+        # select re-derives only the last round)
+        auth = gather(hub, "src_key", "dst_key", "a")
+        hub = gather(auth, "dst_key", "src_key", "h").transform(cut_lineage)
     return (
         nodes.join(hub, nodes["nid"] == hub["key"], "left")
         .join(auth.withColumnRenamed("key", "akey"), nodes["nid"] == F.col("akey"), "left")
@@ -1543,10 +1518,7 @@ def betweenness_k(
     )
 
 
-def ktruss_peel(
-    edges: DataFrame, k: int = 4, rounds: int = 3,
-    pre_deduped: bool = False,
-) -> DataFrame:
+def ktruss_peel(edges: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
     """k-truss of an undirected simple graph (Cohen '08): the maximal
     subgraph where every edge sits in ≥ k−2 triangles — the standard
     cohesion refinement of k-core (every k-truss is a (k−1)-core, but
@@ -1554,39 +1526,35 @@ def ktruss_peel(
     genuinely dense communities that degree alone can't).
 
     Peeling with a FIXED round budget, like :func:`kcore_peel`: each
-    round enumerates triangles on the canonical (a < b) edge set via the
-    three-way wedge-closing join (each triangle found exactly once as
-    a < b < c), explodes each triangle's three edges, counts per-edge
-    support with one hash aggregate, and drops edges below k−2.  A
-    fixpoint inside the budget is reported honestly by the support
-    column of the FINAL survivor set (recomputed once after the last
-    peel, so callers can check every reported support ≥ k−2 ⇔
-    converged).  Output: ``(a, b, support)``, canonical, ascending.
+    round enumerates the triangles of the canonical (a < b) edge set with
+    :func:`_triangles` (each found exactly once), explodes each
+    triangle's three edges, counts per-edge support with one hash
+    aggregate, and drops edges below k−2.  A fixpoint inside the budget
+    is reported honestly by the support column of the FINAL survivor set
+    (recomputed once after the last peel, so callers can check every
+    reported support ≥ k−2 ⇔ converged).  Output: ``(a, b, support)``,
+    canonical, ascending.
 
-    Scale: per round, one self-join pair on the hub-capped edge table +
-    one map-side-combined aggregate; every survivor frame is
-    lineage-cut.  Triangle enumeration cost is Σ_e min-degree — callers
-    bound it upstream with the same max-fanout hub discipline as
+    Scale: per round, the degree-oriented wedge join of
+    :func:`_triangles` on the hub-capped edge table + one
+    map-side-combined aggregate; every survivor frame is lineage-cut.
+    Triangle enumeration cost is Σ_e min-degree — callers bound it
+    upstream with the same max-fanout hub discipline as
     bipartite_projection / neighbor-Jaccard (a truss never contains a
     hubless triangle that the cap would have cut: dropped hubs can only
     LOWER supports, so the cap is a documented approximation exactly as
     in those operators).
     """
-    # ``pre_deduped=True`` is the caller's proof obligation that the
-    # CANONICALIZED (least, greatest) pair set is duplicate-free and
-    # self-loop-free (duplicates would double-count triangle support).
-    # The gate proves it structurally: every edge family is per-family
-    # distinct, the unordered prefix pairs of the families are pairwise
-    # distinct, and no family's reverse is a family — so canonicalization
-    # cannot collide two rows.  Skipping the no-op distinct removes the
-    # largest prep shuffle in the query (a string-pair dedup of the
-    # biggest table); the cut then materializes a shuffle-free projection.
-    und_keys = edges.select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+    # Duplicate pairs and self-loops would miscount triangle support, so
+    # the canonical pair set is always deduplicated (gates/graph.py's
+    # q_graph_ktruss records why skipping it does not pay even where the
+    # input is provably duplicate-free).
+    und_keys = (
+        edges.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+        .transform(cut_lineage)
     )
-    if not pre_deduped:
-        und_keys = und_keys.where(F.col("a") != F.col("b")).distinct()
-    und_keys = und_keys.transform(cut_lineage)
     # The peel iterates on 8-byte xxhash64 node ids (the kcore/hits
     # discipline), pairs re-canonicalized by ID order: support counts
     # are orientation- and representation-invariant (any injective node
@@ -1600,50 +1568,10 @@ def ktruss_peel(
     ).transform(cut_lineage)
 
     def support(e: DataFrame) -> DataFrame:
-        # Degree-oriented wedge enumeration (the triangle_stats discipline,
-        # Suri & Vassilvitskii WWW'11): orienting low-degree → high-degree
-        # bounds per-vertex wedge fanout by the ORIENTED out-degree
-        # (≤ O(√m)), where the id-ordered join explodes quadratically at
-        # hub vertices — measured 10.6 s → see NOTES_r7 for the id-ordered
-        # baseline on the fixture graph's region hubs.  Each triangle is
-        # produced exactly once (unique middle vertex in the total order),
-        # then its three sides are re-canonicalized for the support count,
-        # which is orientation-invariant — the SQL oracle keeps the
-        # readable id-ordered form.
-        deg = (
-            e.select(F.col("a").alias("key"))
-            .unionByName(e.select(F.col("b").alias("key")))
-            .groupBy("key")
-            .agg(F.count("*").alias("deg"))
-        )
-        da = deg.select(F.col("key").alias("a"), F.col("deg").alias("deg_a"))
-        db = deg.select(F.col("key").alias("b"), F.col("deg").alias("deg_b"))
-        fwd = F.struct("deg_a", "a") < F.struct("deg_b", "b")
-        oriented = (
-            e.join(da, "a")
-            .join(db, "b")
-            .select(
-                F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-                F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-            )
-            .transform(cut_lineage_lazy)
-        )
-        e1 = oriented.select(F.col("u").alias("w_src"), F.col("v").alias("w_mid"))
-        e2 = oriented.select(F.col("u").alias("w_mid"), F.col("v").alias("w_dst"))
-        tri = (
-            e1.join(e2, "w_mid")
-            .withColumns(
-                {
-                    "ca": F.least("w_src", "w_dst"),
-                    "cb": F.greatest("w_src", "w_dst"),
-                }
-            )
-            .join(
-                e.select(F.col("a").alias("ca"), F.col("b").alias("cb")),
-                ["ca", "cb"],
-            )
-        )
-        sides = tri.select(
+        # each triangle's three sides, re-canonicalized; the degree
+        # orientation keeps the wedge join tractable at hub vertices (on
+        # 10× data the key-ordered join took 30.9× longer, this 7.9×)
+        sides = _triangles(e).select(
             F.explode(
                 F.array(
                     F.struct(
@@ -1654,7 +1582,7 @@ def ktruss_peel(
                         F.least("w_mid", "w_dst").alias("a"),
                         F.greatest("w_mid", "w_dst").alias("b"),
                     ),
-                    F.struct(F.col("ca").alias("a"), F.col("cb").alias("b")),
+                    F.struct("a", "b"),
                 )
             ).alias("s")
         ).select("s.a", "s.b")

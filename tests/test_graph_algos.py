@@ -1,11 +1,15 @@
-"""Pregel-style algorithm behaviour on constructed graphs."""
+"""Graph operator behaviour on constructed graphs and on the fixture."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from egraphdb_spark.operators.graph_algos import bfs_levels, connected_components
+from egraphdb_spark.operators.graph_algos import (
+    adamic_adar_pairs,
+    bfs_levels,
+    connected_components,
+)
 
 
 def _edges(spark, pairs):
@@ -60,18 +64,11 @@ def test_cut_profile_names_the_gate_module(spark, monkeypatch):
 
 
 def test_cc_directed_chain_undirected_semantics(spark):
-    # undirected=True joins a long chain into one component even though
-    # edges all point one way
+    # CC works on the undirected closure: a long chain is one component
+    # even though its edges all point one way
     e = _edges(spark, [("n3", "n2"), ("n2", "n1"), ("n1", "n0")])
     got = {r["key"]: r["component"] for r in connected_components(e).collect()}
     assert set(got.values()) == {"n0"}
-
-
-def test_cc_directed_mode(spark):
-    # directed min-propagation: labels only flow src→dst
-    e = _edges(spark, [("b", "c"), ("a", "c")])
-    got = {r["key"]: r["component"] for r in connected_components(e, undirected=False).collect()}
-    assert got["c"] == "a" and got["b"] == "b" and got["a"] == "a"
 
 
 def test_sssp_lighter_long_path_beats_heavy_short_path(spark):
@@ -470,3 +467,90 @@ def test_betweenness_k_hand_computed_diamond(spark):
     assert got == {
         "b": 3_000_000, "c": 1_000_000, "d": 1_000_000, "e": 3_000_000,
     }, got
+
+
+# ------------------------------------------------------------------ k-truss
+
+
+def test_ktruss_k4_keeps_clique_peels_pendant(spark):
+    from egraphdb_spark.operators.graph_algos import ktruss_peel
+
+    # K4 on {1..4} (every edge in 2 triangles) + pendant triangle {4,5,6}
+    # (support 1): k=4 keeps exactly the K4, peels the pendant
+    k4 = [(a, b) for a in "1234" for b in "1234" if a < b]
+    pend = [("4", "5"), ("4", "6"), ("5", "6")]
+    df = spark.createDataFrame(k4 + pend, "a string, b string")
+    out = ktruss_peel(df, k=4, rounds=2).collect()
+    assert sorted((r.a, r.b) for r in out) == sorted(k4)
+    assert all(r.support == 2 for r in out)
+
+
+def test_ktruss_cascade_multi_round(spark):
+    from egraphdb_spark.operators.graph_algos import ktruss_peel
+
+    # triangle chain (1,2,3),(2,3,4),(3,4,5): k=4 peel cascades —
+    # round 1 drops the support-1 flanks, round 2 finds the shared
+    # edges (2,3),(3,4) now triangle-less and empties the graph
+    tri = [("1","2"),("1","3"),("2","3"),("2","4"),("3","4"),("3","5"),("4","5")]
+    df = spark.createDataFrame(tri, "a string, b string")
+    assert ktruss_peel(df, k=4, rounds=2).count() == 0
+    # k=3 keeps the whole chain (every edge has >= 1 triangle)
+    out = ktruss_peel(df, k=3, rounds=2).collect()
+    assert len(out) == 7
+    assert {r.support for r in out} == {1, 2}
+
+
+def test_ktruss_canonicalizes_and_dedupes(spark):
+    from egraphdb_spark.operators.graph_algos import ktruss_peel
+
+    # duplicate rows, reversed orientation, self-loop: one clean triangle
+    rows = [("b", "a"), ("a", "b"), ("b", "c"), ("a", "c"), ("c", "c")]
+    df = spark.createDataFrame(rows, "a string, b string")
+    out = ktruss_peel(df, k=3, rounds=1).collect()
+    assert sorted((r.a, r.b) for r in out) == [("a","b"),("a","c"),("b","c")]
+    assert all(r.support == 1 for r in out)
+
+
+# ------------------------------------------------------------ Adamic–Adar
+
+
+def test_adamic_adar_hand_computed(spark):
+    import math
+
+    # a and b share witnesses z1 (deg 2) and z2 (deg 3).
+    e = _edges(
+        spark,
+        [("a", "z1"), ("b", "z1"), ("a", "z2"), ("b", "z2"), ("c", "z2")],
+    )
+    out = adamic_adar_pairs(e, min_common=2).collect()
+    [r] = [r for r in out if {r["node_a"], r["node_b"]} == {"a", "b"}]
+    expected = math.floor(1e9 / math.log(2)) + math.floor(1e9 / math.log(3))
+    assert r["common"] == 2 and r["aa_nano"] == expected
+    # The only other >=2-witness pair is (z1, z2), witnessed by a and b
+    # (the graph is undirected); (a,c)/(b,c) share only z2.
+    [rz] = [r for r in out if {r["node_a"], r["node_b"]} == {"z1", "z2"}]
+    assert rz["aa_nano"] == 2 * math.floor(1e9 / math.log(2))
+    assert len(out) == 2
+
+
+def test_adamic_adar_hub_guard_drops_witness(spark):
+    # z is a 5-degree hub; with max_degree=4 it cannot witness any pair.
+    e = _edges(spark, [(n, "z") for n in "abcde"])
+    assert adamic_adar_pairs(e, min_common=1, max_degree=4).count() == 0
+    # Raising the cap restores the C(5,2) pairs.
+    assert adamic_adar_pairs(e, min_common=1, max_degree=5).count() == 10
+
+
+# ------------------------------------------------------------ degree stats
+
+
+def test_degree_stats_buckets(graph):
+    from pyspark.sql import functions as F
+
+    from egraphdb_spark.operators.graph_algos import degree_stats
+
+    out = degree_stats(graph.edges).collect()
+    assert out
+    for r in out:
+        lo, hi = 1 << r["bucket"], (1 << (r["bucket"] + 1)) - 1
+        assert lo <= r["min_deg"] <= r["max_deg"] <= hi

@@ -265,12 +265,10 @@ def test_bfs_path_is_a_shortest_path_or_none(spark):
     assert outcomes == {True, False}
 
 
-def test_triangle_census_matches_reference_both_orientations(spark):
+def test_triangle_census_matches_reference(spark):
     for name, pairs in GRAPHS.items():
-        want = tri_ref(pairs)
-        for orient in ("degree", "id"):
-            row = triangle_stats(_edges(spark, pairs), orientation=orient).collect()[0]
-            assert row.asDict() == want, (name, orient)
+        row = triangle_stats(_edges(spark, pairs)).collect()[0]
+        assert row.asDict() == tri_ref(pairs), name
 
 
 def test_kcore_peel_matches_reference(spark):
@@ -470,36 +468,6 @@ def test_degree_stats_matches_reference(spark):
             for r in degree_stats(_edges(spark, pairs)).collect()
         }
         assert got == degstats_ref(pairs), name
-
-
-def cc_directed_ref(pairs):
-    # fixpoint of min-label propagation along DIRECTED edges:
-    # label(v) = min key over {v} ∪ ancestors(v)
-    fwd: dict[str, set[str]] = {}
-    nodes = sorted({k for p in pairs for k in p})
-    for s, d in pairs:
-        fwd.setdefault(s, set()).add(d)
-    lbl = {k: k for k in nodes}
-    changed = True
-    while changed:
-        changed = False
-        for u, vs in fwd.items():
-            for v in vs:
-                if lbl[u] < lbl[v]:
-                    lbl[v] = lbl[u]
-                    changed = True
-    return lbl
-
-
-def test_cc_directed_mode_matches_reference(spark):
-    for name, pairs in GRAPHS.items():
-        got = {
-            r["key"]: r["component"]
-            for r in connected_components(
-                _edges(spark, pairs), max_iter=30, undirected=False
-            ).collect()
-        }
-        assert got == cc_directed_ref(pairs), name
 
 
 def aa_ref(pairs, min_common=2, max_degree=100):

@@ -294,18 +294,6 @@ def test_label_centroids_fixed_point_math(spark):
     assert all(r["n_vectors"] == (2 if r["label"] == "x" else 1) for r in rows.values())
 
 
-def test_degree_stats_buckets(graph):
-    from pyspark.sql import functions as F
-
-    from egraphdb_spark.operators.graph_algos import degree_stats
-
-    out = degree_stats(graph.edges).collect()
-    assert out
-    for r in out:
-        lo, hi = 1 << r["bucket"], (1 << (r["bucket"] + 1)) - 1
-        assert lo <= r["min_deg"] <= r["max_deg"] <= hi
-
-
 def test_incremental_lsh_finds_planted_dup(spark):
     from egraphdb_spark.operators import dedup
 

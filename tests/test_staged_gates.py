@@ -1,6 +1,6 @@
 """Gopher quality rules, two-sample KS drift, seeded Laplace DP counts +
-clipped DP mean, AMS F₂ sketch, k-truss peeling, k-center coreset
-(gates/text.py, gates/sketch_sample.py, gates/graph.py).  Hand-computed
+clipped DP mean, AMS F₂ sketch, k-center coreset (gates/text.py,
+gates/sketch_sample.py).  Hand-computed
 cases and defining invariants; oracle parity is test_parity.py's."""
 
 from __future__ import annotations
@@ -161,48 +161,6 @@ def test_ams_f2_estimator_quality(spark):
     mean = out[0].f2_est_mean
     assert f2 == sum((60 // j) ** 2 for j in range(1, 60))
     assert mean == pytest.approx(f2, rel=1.0)
-
-
-# ------------------------------------------------------------------ k-truss
-
-
-def test_ktruss_k4_keeps_clique_peels_pendant(spark):
-    from egraphdb_spark.operators.graph_algos import ktruss_peel
-
-    # K4 on {1..4} (every edge in 2 triangles) + pendant triangle {4,5,6}
-    # (support 1): k=4 keeps exactly the K4, peels the pendant
-    k4 = [(a, b) for a in "1234" for b in "1234" if a < b]
-    pend = [("4", "5"), ("4", "6"), ("5", "6")]
-    df = spark.createDataFrame(k4 + pend, "a string, b string")
-    out = ktruss_peel(df, k=4, rounds=2).collect()
-    assert sorted((r.a, r.b) for r in out) == sorted(k4)
-    assert all(r.support == 2 for r in out)
-
-
-def test_ktruss_cascade_multi_round(spark):
-    from egraphdb_spark.operators.graph_algos import ktruss_peel
-
-    # triangle chain (1,2,3),(2,3,4),(3,4,5): k=4 peel cascades —
-    # round 1 drops the support-1 flanks, round 2 finds the shared
-    # edges (2,3),(3,4) now triangle-less and empties the graph
-    tri = [("1","2"),("1","3"),("2","3"),("2","4"),("3","4"),("3","5"),("4","5")]
-    df = spark.createDataFrame(tri, "a string, b string")
-    assert ktruss_peel(df, k=4, rounds=2).count() == 0
-    # k=3 keeps the whole chain (every edge has >= 1 triangle)
-    out = ktruss_peel(df, k=3, rounds=2).collect()
-    assert len(out) == 7
-    assert {r.support for r in out} == {1, 2}
-
-
-def test_ktruss_canonicalizes_and_dedupes(spark):
-    from egraphdb_spark.operators.graph_algos import ktruss_peel
-
-    # duplicate rows, reversed orientation, self-loop: one clean triangle
-    rows = [("b", "a"), ("a", "b"), ("b", "c"), ("a", "c"), ("c", "c")]
-    df = spark.createDataFrame(rows, "a string, b string")
-    out = ktruss_peel(df, k=3, rounds=1).collect()
-    assert sorted((r.a, r.b) for r in out) == [("a","b"),("a","c"),("b","c")]
-    assert all(r.support == 1 for r in out)
 
 
 def test_ks_one_side_empty_is_total_drift(spark):

@@ -1,4 +1,4 @@
-"""Unit tests: OHLC rollup, gap-fill/LOCF, Adamic–Adar, readability."""
+"""Unit tests: OHLC rollup, gap-fill/LOCF, readability."""
 
 import datetime as dt
 
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from egraphdb_spark.operators.timeseries import gapfill_locf, ohlc_rollup
-from egraphdb_spark.operators.graph_algos import adamic_adar_pairs
 from egraphdb_spark.operators.text import readability_stats
 
 
@@ -84,40 +83,6 @@ def test_gapfill_first_day_always_observed(spark):
     out = gapfill_locf(df, "k", "ts", "value").collect()
     assert len(out) == 7
     assert all(r["filled_cents"] is not None for r in out)
-
-
-# ---------------------------------------------------------- Adamic–Adar
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, ["src_key", "dst_key"])
-
-
-def test_adamic_adar_hand_computed(spark):
-    import math
-
-    # a and b share witnesses z1 (deg 2) and z2 (deg 3).
-    e = _edges(
-        spark,
-        [("a", "z1"), ("b", "z1"), ("a", "z2"), ("b", "z2"), ("c", "z2")],
-    )
-    out = adamic_adar_pairs(e, min_common=2).collect()
-    [r] = [r for r in out if {r["node_a"], r["node_b"]} == {"a", "b"}]
-    expected = math.floor(1e9 / math.log(2)) + math.floor(1e9 / math.log(3))
-    assert r["common"] == 2 and r["aa_nano"] == expected
-    # The only other >=2-witness pair is (z1, z2), witnessed by a and b
-    # (the graph is undirected); (a,c)/(b,c) share only z2.
-    [rz] = [r for r in out if {r["node_a"], r["node_b"]} == {"z1", "z2"}]
-    assert rz["aa_nano"] == 2 * math.floor(1e9 / math.log(2))
-    assert len(out) == 2
-
-
-def test_adamic_adar_hub_guard_drops_witness(spark):
-    # z is a 5-degree hub; with max_degree=4 it cannot witness any pair.
-    e = _edges(spark, [(n, "z") for n in "abcde"])
-    assert adamic_adar_pairs(e, min_common=1, max_degree=4).count() == 0
-    # Raising the cap restores the C(5,2) pairs.
-    assert adamic_adar_pairs(e, min_common=1, max_degree=5).count() == 10
 
 
 # ---------------------------------------------------------- readability
